@@ -1,10 +1,13 @@
 """M1+M2: encoder + CRF-Viterbi mention detection as one mapInPandas stage.
 
 The Spark re-expression of the reference's serving path
-(ner_server.py:11-27 → crf_albert.py:209-226): featurize → encode →
-decode → recover tags → mention spans, fused into ONE Arrow-batched
-``mapInPandas`` stage so features never hit a shuffle and inputs stay
-keyed (no order-based zip — the reference's J5 trap, ner_server.py:16-19).
+(ner_server.py:11-27 → crf_albert.py:209-226): extract → pack →
+featurize → encode → decode → recover tags → mention spans, fused into
+ONE Arrow-batched ``mapInPandas`` stage so features never hit a shuffle
+and inputs stay keyed (no order-based zip — the reference's J5 trap,
+ner_server.py:16-19).  Its output nests each record's mentions;
+``explode_mentions`` flattens them JVM-side for the consumers that
+need one row per mention (linking, the mentions snapshot).
 
 Scale design:
 - model weights ship via ``sc.broadcast`` once (the warm-start analog,
@@ -15,7 +18,7 @@ Scale design:
   the batch's max real length — the reference pads everything to 384
   (crf_utils.py:185-198); we keep rectangular batches but avoid padded
   matmul work.
-- 1→N row fan-out (record → mentions) makes this UDTF-shaped, hence
+- 1→N row fan-out (page → records) makes this UDTF-shaped, hence
   mapInPandas rather than a scalar UDF (SURVEY.md §2.10).
 """
 
@@ -25,23 +28,13 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     StringType,
     StructField,
     StructType,
-)
-
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("rec_id", IntegerType(), False),
-        StructField("start_pos", IntegerType(), False),
-        StructField("end_pos", IntegerType(), False),
-        StructField("label_type", StringType(), False),
-        StructField("surface", StringType(), False),
-    ]
 )
 
 # fused extract→pack→detect output: one row per packed record, mentions
@@ -67,83 +60,6 @@ RECORDS_MENTIONS_SCHEMA = StructType(
         ),
     ]
 )
-
-
-def detect_mentions(records: DataFrame, weights_bc) -> DataFrame:
-    """records(url, rec_id, text) → mentions(url, rec_id, start, end, type, surface).
-
-    ``weights_bc``: a ``Broadcast[dict[str, np.ndarray]]`` of the
-    surrogate model weights (core.artifacts.get_weights()).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..core.bio import tags_to_mentions
-        from ..core.featurize import convert_single_example, recover_tags
-        from ..core.labels import INV_LABEL_MAP
-        from ..core.model import encode_logits_trimmed, viterbi_decode
-        from ..core.vocab import build_vocab
-
-        weights = weights_bc.value
-        vocab = build_vocab()
-
-        # numpy sub-batch: bounds the encode's intermediate arrays
-        # (window-concat is ~2.7 KB/position — a 512-row Arrow batch
-        # would materialize >500 MB, which across 32 workers saturates
-        # memory bandwidth and erases the parallel speedup; 128 rows ×
-        # ~384 positions ≈ 130 MB total working set measured optimal
-        # under 32-way contention)
-        SUB = 128
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            feats = [
-                convert_single_example(t if t is not None else "", vocab=vocab)
-                for t in pdf["text"]
-            ]
-            all_ids = np.asarray([f[0] for f in feats], dtype=np.int64)
-            all_lengths = np.asarray([sum(f[1]) for f in feats], dtype=np.int64)
-            path_chunks = []
-            for lo in range(0, len(feats), SUB):
-                input_ids = all_ids[lo : lo + SUB]
-                lengths = all_lengths[lo : lo + SUB]
-                tmax = int(lengths.max())
-                logits = encode_logits_trimmed(input_ids, tmax, weights)
-                p = viterbi_decode(logits, lengths, weights["trans"])
-                if p.shape[1] < all_ids.shape[1]:
-                    p = np.pad(p, ((0, 0), (0, all_ids.shape[1] - p.shape[1])))
-                path_chunks.append(p)
-            paths = np.concatenate(path_chunks, axis=0)
-            input_ids = all_ids
-
-            urls, rids, ss, es, labs, surfs = [], [], [], [], [], []
-            for row_i, (url, rid, text) in enumerate(
-                zip(pdf["url"], pdf["rec_id"], pdf["text"])
-            ):
-                tags = recover_tags(
-                    paths[row_i].tolist(), input_ids[row_i].tolist(), INV_LABEL_MAP
-                )
-                for label, s, e in tags_to_mentions(tags):
-                    urls.append(url)
-                    rids.append(rid)
-                    ss.append(s)
-                    es.append(e)
-                    labs.append(label)
-                    surfs.append(text[s:e])
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype=object),
-                    "rec_id": pd.Series(rids, dtype="int32"),
-                    "start_pos": pd.Series(ss, dtype="int32"),
-                    "end_pos": pd.Series(es, dtype="int32"),
-                    "label_type": pd.Series(labs, dtype=object),
-                    "surface": pd.Series(surfs, dtype=object),
-                }
-            )
-
-    return records.mapInPandas(run, MENTIONS_SCHEMA)
 
 
 def detect_records_from_pages(
@@ -176,6 +92,12 @@ def detect_records_from_pages(
 
         weights = weights_bc.value
         vocab = build_vocab()
+        # numpy sub-batch: bounds the encode's intermediate arrays
+        # (window-concat is ~2.7 KB/position — a 512-row Arrow batch
+        # would materialize >500 MB, which across 32 workers saturates
+        # memory bandwidth and erases the parallel speedup; 128 rows ×
+        # ~384 positions ≈ 130 MB total working set measured optimal
+        # under 32-way contention)
         SUB = 128
 
         for pdf in batches:
@@ -231,3 +153,11 @@ def detect_records_from_pages(
             )
 
     return pages.mapInPandas(run, RECORDS_MENTIONS_SCHEMA)
+
+
+def explode_mentions(records_mentions: DataFrame) -> DataFrame:
+    """(url, rec_id, text, mentions) → one row per mention:
+    (url, rec_id, start_pos, end_pos, label_type, surface)."""
+    return records_mentions.select(
+        "url", "rec_id", F.explode("mentions").alias("m")
+    ).select("url", "rec_id", "m.*")

@@ -10,16 +10,15 @@ delimiter between them), emit (subj, pred, obj) when a rule for
 (m1.label_type, m2.label_type) exists whose connective ``pattern``
 occurs in the between-text.
 
-Scale design:
-- the self-join shuffles both sides on (url, rec_id) — co-partitioned
-  by construction, and record keys are near-unique so there is no skew;
-  AQE handles residual imbalance.
-- rules are a tiny dimension → ``broadcast()``.
-- the between-text comes from re-joining the records table on the same
-  (url, rec_id) key — again co-partitioned, one shuffle reused across
-  both joins (Exchange reuse).
-- everything is Catalyst expressions (substring/instr/locate) — no
-  Python in this stage.
+Scale design (the pairing runs on the detect stage's nested output):
+- a record's mentions arrive co-located in one array, so pairs are
+  generated and delimiter-filtered inside the array — a narrow map, no
+  self-join and no shuffle of the fact table.
+- rules, the entity dictionary and the canonicalization map are
+  dimension tables → ``broadcast()`` joins.
+- the only shuffle in the pages→triples plan is the final ``distinct``.
+- everything is Catalyst expressions (transform/filter/substring/instr)
+  — no Python in this stage.
 """
 
 from __future__ import annotations
@@ -34,86 +33,6 @@ from pyspark.sql import functions as F
 # substring check can never diverge.
 DELIMITERS = ("；", "，", "？", "。", "！", "……")
 _DELIM_RE = "|".join(DELIMITERS)
-
-
-def emit_triples(
-    linked_mentions: DataFrame,
-    records: DataFrame,
-    rules: DataFrame,
-) -> DataFrame:
-    """→ (subj_id, predicate, obj_id, url, rec_id) distinct.
-
-    linked_mentions: (url, rec_id, start_pos, end_pos, label_type,
-    surface, entity_id); records: (url, rec_id, text); rules:
-    (subj_label, obj_label, pattern, predicate).
-    """
-    m1 = linked_mentions.select(
-        "url",
-        "rec_id",
-        F.col("start_pos").alias("s1"),
-        F.col("end_pos").alias("e1"),
-        F.col("label_type").alias("t1"),
-        F.col("entity_id").alias("subj_entity"),
-    )
-    m2 = linked_mentions.select(
-        "url",
-        "rec_id",
-        F.col("start_pos").alias("s2"),
-        F.col("end_pos").alias("e2"),
-        F.col("label_type").alias("t2"),
-        F.col("entity_id").alias("obj_entity"),
-    )
-
-    pairs = m1.join(m2, ["url", "rec_id"]).filter(F.col("s1") < F.col("s2"))
-
-    with_text = pairs.join(records.select("url", "rec_id", "text"), ["url", "rec_id"])
-    with_between = with_text.withColumn(
-        "between", F.expr("substring(text, e1 + 1, s2 - e1)")
-    ).filter(~F.col("between").rlike(_DELIM_RE))
-
-    out = (
-        with_between.join(
-            F.broadcast(rules),
-            (F.col("t1") == F.col("subj_label")) & (F.col("t2") == F.col("obj_label")),
-            "inner",
-        )
-        .filter(F.instr(F.col("between"), F.col("pattern")) > 0)
-        .select(
-            F.col("subj_entity").alias("subj_id"),
-            "predicate",
-            F.col("obj_entity").alias("obj_id"),
-            "url",
-            "rec_id",
-        )
-        .distinct()
-    )
-    return out
-
-
-def canonicalized_triples(triples: DataFrame, component_map: DataFrame) -> DataFrame:
-    """Rewrite subj/obj through the canonicalization map (M10 output).
-
-    component_map: (entity_id, canonical_id). Two broadcast joins —
-    the map is dimension-sized (SURVEY.md §7 stage 3).
-    """
-    subj_map = component_map.withColumnRenamed("entity_id", "subj_id").withColumnRenamed(
-        "canonical_id", "subj_canon"
-    )
-    obj_map = component_map.withColumnRenamed("entity_id", "obj_id").withColumnRenamed(
-        "canonical_id", "obj_canon"
-    )
-    return (
-        triples.join(F.broadcast(subj_map), "subj_id", "left")
-        .join(F.broadcast(obj_map), "obj_id", "left")
-        .select(
-            F.coalesce("subj_canon", "subj_id").alias("subj_id"),
-            "predicate",
-            F.coalesce("obj_canon", "obj_id").alias("obj_id"),
-            "url",
-            "rec_id",
-        )
-        .distinct()
-    )
 
 
 def emit_triples_narrow(
@@ -139,10 +58,10 @@ def emit_triples_narrow(
     tuples.
 
     Mention surfaces are digit-normalized (link.normalize_surface)
-    before the dictionary joins — the same convention the granular path
-    applies in link_mentions (link.py) and the dictionary itself applies
-    in surface_dictionary, so a digit-bearing alias links identically
-    through either plan.
+    before the dictionary joins — the same convention link_mentions
+    (link.py) applies to the mentions snapshot and the dictionary itself
+    applies in surface_dictionary, so a digit-bearing alias links
+    identically in the triples and in the linked table.
     """
     from .link import normalize_surface, surface_dictionary
 

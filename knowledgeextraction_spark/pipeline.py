@@ -1,12 +1,19 @@
 """End-to-end KG-construction pipeline with lineage + resume.
 
 Stage DAG (SURVEY.md §7, the reference serving path re-expressed as
-one declarative dataflow — §3.1):
+one declarative dataflow — §3.1; the same fused plan as the kg_triples
+query, ARCHITECTURE.md §1):
 
-    pages ─ filter(lang='zh') ─ extract(F16) ─ pack(F1+W3, narrow)
-          ─ detect(M1+M2 mapInPandas, broadcast weights) ─ mentions
-          ─ link(J8 broadcast join) ─ pair+rules(M8/M9) ─ triples
-          ─ canonicalize(M10 components) ─ triples/nodes/edges tables
+    pages ─ filter(lang='zh')
+          ─ records: detect_records_from_pages (extract F16 → pack
+            F1+W3 → encode+Viterbi M1+M2 in ONE mapInPandas,
+            broadcast weights) → (url, rec_id, text, mentions[])
+          ├ mentions: explode_mentions ─ linked: link (J8 broadcast join)
+          └ triples: in-array pairing + rules (M8/M9) + canonicalize
+            (M10 components) ─ triples/nodes/edges tables
+
+``linked`` is an output table; the triples stage links inside its own
+broadcast joins and reads only the ``records`` snapshot.
 
 Resumability [NORTH]: each materialized stage writes parquet (stands in
 for an Iceberg snapshot) and is skipped when its output already exists
@@ -30,11 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.canonicalize import entity_component_map
-from .operators.detect import detect_mentions, detect_records_from_pages
-from .operators.extract import extracted_text
+from .operators.detect import detect_records_from_pages, explode_mentions
 from .operators.link import link_mentions, surface_dictionary
-from .operators.segment import packed_records
-from .operators.triples import canonicalized_triples, emit_triples
+from .operators.triples import emit_triples_narrow
 
 
 @dataclass
@@ -82,6 +87,7 @@ class KGPipeline:
         self.lang = lang
         self.out_dir = out_dir
         self._weights_bc = None
+        self._component_map = None
 
     @property
     def weights_bc(self):
@@ -94,54 +100,34 @@ class KGPipeline:
     # --- stage declarations (lazy) -------------------------------------
 
     def records(self, pages: DataFrame) -> DataFrame:
-        gated = pages.filter(F.col("lang") == self.lang)  # P8 language gate
-        with_text = gated.select(
-            "url", extracted_text("html").alias("text")
-        )  # F16; html pruned after this projection
-        return packed_records(with_text, self.max_seq_length)
-
-    def mentions(self, records: DataFrame) -> DataFrame:
-        # the encoder is the FLOP-dominant stage: rebalance records
-        # across all cores first (tiny rows — the shuffle is far cheaper
-        # than idle executors during the matmul)
-        par = self.spark.sparkContext.defaultParallelism
-        return detect_mentions(records.repartition(par), self.weights_bc)
-
-    def records_with_mentions(self, pages: DataFrame) -> DataFrame:
-        """Fused hot path (see detect_records_from_pages): pages →
-        (url, rec_id, text, mentions) in ONE python stage."""
-        par = self.spark.sparkContext.defaultParallelism
+        """pages → (url, rec_id, text, mentions): the one python stage."""
+        # P8 language gate; the fused stage extracts text from the html
         gated = pages.filter(F.col("lang") == self.lang).select("url", "html")
+        # the encoder is the FLOP-dominant work: rebalance pages across
+        # all cores first (the shuffle is far cheaper than idle
+        # executors during the matmul)
+        par = self.spark.sparkContext.defaultParallelism
         return detect_records_from_pages(
             gated.repartition(par * 2), self.weights_bc, self.max_seq_length
         )
 
-    @staticmethod
-    def split_records_mentions(rm: DataFrame) -> tuple[DataFrame, DataFrame]:
-        records = rm.select("url", "rec_id", "text")
-        mentions = rm.select(
-            "url", "rec_id", F.explode("mentions").alias("m")
-        ).select(
-            "url",
-            "rec_id",
-            F.col("m.start_pos").alias("start_pos"),
-            F.col("m.end_pos").alias("end_pos"),
-            F.col("m.label_type").alias("label_type"),
-            F.col("m.surface").alias("surface"),
-        )
-        return records, mentions
+    def mentions(self, records: DataFrame) -> DataFrame:
+        return explode_mentions(records)
 
     def linked(self, mentions: DataFrame) -> DataFrame:
         return link_mentions(mentions, self.entities)
 
     def component_map(self) -> DataFrame:
-        return entity_component_map(
-            self.equivalences, surface_dictionary(self.entities)
-        )
+        if self._component_map is None:
+            self._component_map = entity_component_map(
+                self.equivalences, surface_dictionary(self.entities)
+            )
+        return self._component_map
 
-    def triples(self, linked: DataFrame, records: DataFrame) -> DataFrame:
-        raw = emit_triples(linked, records, self.rules)
-        return canonicalized_triples(raw, self.component_map())
+    def triples(self, records: DataFrame) -> DataFrame:
+        return emit_triples_narrow(
+            records, self.rules, self.entities, self.component_map()
+        )
 
     # --- orchestration --------------------------------------------------
 
@@ -164,10 +150,10 @@ class KGPipeline:
         records = self._stage("records", lambda: self.records(pages), times)
         mentions = self._stage("mentions", lambda: self.mentions(records), times)
         linked = self._stage("linked", lambda: self.linked(mentions), times)
-        triples_df = self._stage(
-            "triples", lambda: self.triples(linked, records), times
+        triples_df = self._stage("triples", lambda: self.triples(records), times)
+        return PipelineResult(
+            records.select("url", "rec_id", "text"), mentions, linked, triples_df, times
         )
-        return PipelineResult(records, mentions, linked, triples_df, times)
 
     def write_graph_tables(self, result: PipelineResult, base: str, n_buckets: int = 16) -> None:
         """Materialize triples/nodes/edges partitioned for query access.

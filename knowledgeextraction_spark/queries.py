@@ -130,6 +130,16 @@ def _extracted_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _records_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """zh pages → the fused detect stage's (url, rec_id, text,
+    mentions), rebalanced across all cores before the encoder."""
+    from .operators.detect import detect_records_from_pages
+
+    par = spark.sparkContext.defaultParallelism
+    zh = _pages(spark, sf_dir).filter(F.col("lang") == "zh").select("url", "html")
+    return detect_records_from_pages(zh.repartition(par), weights_broadcast(spark))
+
+
 _EXTRACT_SQL_BODY = (
     f"SELECT {pages_src.URL_SQL} AS url, "
     f"{{translit}} AS text, lang FROM documents"
@@ -249,16 +259,12 @@ ORDER BY s.surface
 
 
 def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1+M2 mention detection (model-based → rows-only check here;
-    exact parity is pytest's oracle gate)."""
-    from .operators.detect import detect_mentions
+    """M1+M2 mention detection: the fused detect stage, one row per
+    mention (model-based → rows-only check here; exact parity is
+    pytest's oracle gate)."""
+    from .operators.detect import explode_mentions
 
-    records = q_kg_records(spark, sf_dir).withColumn(
-        "rec_id", F.col("rec_id").cast("int")
-    )
-    # rebalance before the FLOP-heavy encoder (see pipeline.mentions)
-    records = records.repartition(spark.sparkContext.defaultParallelism)
-    return detect_mentions(records, weights_broadcast(spark))
+    return explode_mentions(_records_mentions(spark, sf_dir))
 
 
 def q_kg_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,16 +278,13 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8/M9/M10: the flagship — canonicalized (subj, pred, obj) triples.
 
     Uses the fused narrow plan (ARCHITECTURE.md §1): scan → one fused
-    detect mapInPandas → in-array pairing → broadcast joins → distinct.
-    Parity with the granular operator chain and the numpy oracle is
-    asserted in tests/test_spark_pipeline.py."""
+    detect mapInPandas → in-array pairing → broadcast joins → distinct —
+    the same plan KGPipeline runs, whose parity with the numpy oracle
+    is asserted in tests/test_spark_pipeline.py."""
     from .operators.canonicalize import entity_component_map_rows
-    from .operators.detect import detect_records_from_pages
     from .operators.triples import emit_triples_narrow
 
-    par = spark.sparkContext.defaultParallelism
-    zh = _pages(spark, sf_dir).filter(F.col("lang") == "zh").select("url", "html")
-    rm = detect_records_from_pages(zh.repartition(par), weights_broadcast(spark))
+    rm = _records_mentions(spark, sf_dir)
     # dimension prep on the driver (r06): the seed dictionary exists as
     # python lists, and the distributed cmap operator cost ~2 s of
     # tiny-shuffle scheduling PER TRIAL inside every consumer of this
@@ -344,13 +347,10 @@ def q_kg_relations_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     SoftmaxNN surrogate, models.py:31-41).  The rule-based emitter
     (kg_triples) remains the production path; this is the model-scored
     twin.  Oracle: golden parquet from the numpy twin."""
-    from .broadcast import nre_weights_broadcast, weights_broadcast
-    from .operators.detect import detect_records_from_pages
+    from .broadcast import nre_weights_broadcast
     from .operators.nre import classify_relations_fused
 
-    par = spark.sparkContext.defaultParallelism
-    zh = _pages(spark, sf_dir).filter(F.col("lang") == "zh").select("url", "html")
-    rm = detect_records_from_pages(zh.repartition(par), weights_broadcast(spark))
+    rm = _records_mentions(spark, sf_dir)
     return _ck_sort(
         classify_relations_fused(rm, nre_weights_broadcast(spark)).withColumn(
             "score", F.round("score", 6)
@@ -373,36 +373,25 @@ def q_kg_relations_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     goldens.  ONE detection pass feeds both inputs: the fused
     records+mentions table is persisted and branches into (a) pair
     scoring and (b) mention linking — the encoder never runs twice
-    (fused/granular mention parity is pytest-asserted, so the linked
-    branch equals the kg_linked golden)."""
+    (the linked branch is kg_linked's own plan, so it equals the
+    kg_linked golden)."""
     from pyspark import StorageLevel
 
     from .broadcast import nre_weights_broadcast
-    from .operators.detect import detect_records_from_pages
+    from .operators.detect import explode_mentions
     from .operators.link import link_mentions
     from .operators.nre import bag_relations, classify_relations_fused
 
-    par = spark.sparkContext.defaultParallelism
-    zh = _pages(spark, sf_dir).filter(F.col("lang") == "zh").select("url", "html")
     # persisted for the two consumers below; unlike crf_fit (which
     # materializes internally and can unpersist in-query) the result
     # here is lazy, so the cache lives until the caller's
     # clearCache()/session end — same contract as dedup_jaccard's
     # shared shingle table
-    rm = detect_records_from_pages(
-        zh.repartition(par), weights_broadcast(spark)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    rm = _records_mentions(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     scored = classify_relations_fused(
         rm, nre_weights_broadcast(spark)
     ).withColumn("score", F.round("score", 6))
-    mentions = rm.select("url", "rec_id", F.explode("mentions").alias("m")).select(
-        "url",
-        "rec_id",
-        F.col("m.start_pos").alias("start_pos"),
-        F.col("m.label_type").alias("label_type"),
-        F.col("m.surface").alias("surface"),
-    )
-    linked = link_mentions(mentions, pages_src.entities_df(spark))
+    linked = link_mentions(explode_mentions(rm), pages_src.entities_df(spark))
     return _ck_sort(
         bag_relations(scored, linked)
         .withColumn("bag_score", F.round("bag_score", 6))

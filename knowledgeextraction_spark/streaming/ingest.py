@@ -5,12 +5,12 @@ request/response HTTP, tornado_http_sevrer.py:20-27 — SURVEY.md §2.9);
 the batch pipeline is the core engine. This module adds the incremental
 path SURVEY.md §2.9 earmarked: new page files landing in a directory
 (the parquet stand-in for Iceberg incremental snapshot reads) stream
-through the SAME fused batch operators inside ``foreachBatch`` and
-land in the triples table. Exactly-once comes from the streaming
-checkpoint (source offsets) + an epoch-keyed idempotent write: each
-micro-batch overwrites its own ``epoch_id=N`` partition, so a replay
-after a crash between sink write and commit-log write is a no-op
-rewrite, never a duplicate append.
+through the SAME ``KGPipeline`` records and triples stages inside
+``foreachBatch`` and land in the triples table. Exactly-once comes from
+the streaming checkpoint (source offsets) + an epoch-keyed idempotent
+write: each micro-batch overwrites its own ``epoch_id=N`` partition,
+so a replay after a crash between sink write and commit-log write is a
+no-op rewrite, never a duplicate append.
 
 No event-time logic is needed (warc_ts is a partitioning column, not a
 watermark driver), so foreachBatch over micro-batches is the idiomatic
@@ -24,11 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..broadcast import weights_broadcast
-from ..operators.canonicalize import entity_component_map
-from ..operators.detect import detect_records_from_pages
-from ..operators.link import surface_dictionary
-from ..operators.triples import emit_triples_narrow
+from ..pipeline import KGPipeline
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -69,22 +65,14 @@ def incremental_triples(
     Dimension tables are resolved once at start (they are slowly
     changing; restart the query to pick up a new dictionary snapshot).
     """
-    import pyspark.sql.functions as F
-
-    bc = weights_broadcast(spark)
-    cmap = entity_component_map(equivalences, surface_dictionary(entities)).cache()
-    cmap.count()
-    entities = entities.cache()
-    rules = rules.cache()
+    pipe = KGPipeline(spark, entities.cache(), rules.cache(), equivalences, lang=lang)
+    pipe.component_map().cache().count()  # memoized: every batch reuses it
 
     triples_path = os.path.join(out_dir, "triples")
     checkpoint = os.path.join(out_dir, "_checkpoint")
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        zh = batch_df.filter(F.col("lang") == lang).select("url", "html")
-        rm = detect_records_from_pages(zh, bc)
-        triples = emit_triples_narrow(rm, rules, entities, cmap)
-        write_epoch(triples, triples_path, epoch_id)
+        write_epoch(pipe.triples(pipe.records(batch_df)), triples_path, epoch_id)
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)

@@ -79,16 +79,18 @@ def test_banded_lcs_matches_full_lcs():
 
 def test_salted_link_matches_unsalted(spark, corpus):
     from knowledgeextraction_spark.broadcast import weights_broadcast
-    from knowledgeextraction_spark.operators.detect import detect_mentions
+    from knowledgeextraction_spark.operators.detect import (
+        detect_records_from_pages,
+        explode_mentions,
+    )
     from knowledgeextraction_spark.operators.link import link_mentions
-    from knowledgeextraction_spark.operators.segment import packed_records
     from knowledgeextraction_spark.sources.pages import entities_df, fixture_pages
 
     import pyspark.sql.functions as F
 
     pages = fixture_pages(spark, corpus).filter(F.col("lang") == "zh")
-    records = packed_records(pages.select("url", "text"))
-    mentions = detect_mentions(records, weights_broadcast(spark)).cache()
+    rm = detect_records_from_pages(pages.select("url", "html"), weights_broadcast(spark))
+    mentions = explode_mentions(rm).cache()
     ents = entities_df(spark, corpus.entities)
 
     def key_set(df):

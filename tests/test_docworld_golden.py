@@ -56,3 +56,28 @@ def test_html_roundtrip_on_docworld():
     from knowledgeextraction_spark.oracle.docworld import docworld_records
 
     assert len(docworld_records(SF_DIR, verify_html_roundtrip=True)) > 0
+
+
+def test_run_pipeline_script_matches_golden(spark, tmp_path):
+    """The spark-submit entrypoint (scripts/run_pipeline.py), run as its
+    own process, writes graph tables whose triples equal the golden."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "kg_out"
+    script = os.path.join(repo, "scripts", "run_pipeline.py")
+    proc = subprocess.run(
+        [sys.executable, script, "--sf-dir", SF_DIR, "--out", str(out)],
+        env=dict(os.environ, PYTHONPATH=repo),
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    cols = ["subj_id", "predicate", "obj_id", "url", "rec_id"]
+    graph = spark.read.parquet(str(out / "graph" / "triples")).select(*cols)
+    got = {tuple(r) for r in graph.collect()}
+    golden = pd.read_parquet(f"{GOLDEN_DIR}/kg_triples.parquet")[cols]
+    want = set(golden.itertuples(index=False, name=None))
+    assert len(want) > 0 and got == want

@@ -413,36 +413,37 @@ def test_triple_delimiters_match_reference(spark):
     """The reference splits on '……' (text_segment.py:27); a lone '…' is
     NOT a sentence delimiter — pairs across '…' must still pair, pairs
     across '……' must not."""
-    from knowledgeextraction_spark.operators.triples import emit_triples
+    from knowledgeextraction_spark.fixtures.generator import Entity
+    from knowledgeextraction_spark.operators.detect import RECORDS_MENTIONS_SCHEMA
+    from knowledgeextraction_spark.operators.triples import emit_triples_narrow
+    from knowledgeextraction_spark.sources.pages import entities_df
 
-    def mention(url, rec, s, e, t, surf, eid):
-        return (url, rec, s, e, t, surf, eid)
-
-    schema = (
-        "url string, rec_id int, start_pos int, end_pos int, "
-        "label_type string, surface string, entity_id long"
-    )
+    a, b = (0, 1, "T1", "甲"), (3, 4, "T2", "乙")
     # rec 0: A…B (lone ellipsis between) — keep; rec 1: A……B — reject
-    mentions = spark.createDataFrame(
+    records_mentions = spark.createDataFrame(
         [
-            mention("u", 0, 0, 1, "T1", "甲", 1),
-            mention("u", 0, 3, 4, "T2", "乙", 2),
-            mention("u", 1, 0, 1, "T1", "甲", 1),
-            mention("u", 1, 4, 5, "T2", "乙", 2),
+            ("u", 0, "甲连…乙", [a, b]),
+            ("u", 1, "甲连……乙", [a, (4, 5, "T2", "乙")]),
         ],
-        schema,
+        RECORDS_MENTIONS_SCHEMA,
     )
-    records = spark.createDataFrame(
-        [("u", 0, "甲连…乙"), ("u", 1, "甲连……乙")],
-        "url string, rec_id int, text string",
+    entities = entities_df(
+        spark,
+        [
+            Entity(1, "甲", [], "T1", [0.0], True),
+            Entity(2, "乙", [], "T2", [0.0], True),
+        ],
     )
     rules = spark.createDataFrame(
         [("T1", "T2", "连", "rel")],
         "subj_label string, obj_label string, pattern string, predicate string",
     )
+    no_merges = spark.createDataFrame([], "entity_id long, canonical_id long")
     got = {
         (r.subj_id, r.predicate, r.obj_id, r.rec_id)
-        for r in emit_triples(mentions, records, rules).collect()
+        for r in emit_triples_narrow(
+            records_mentions, rules, entities, no_merges
+        ).collect()
     }
     assert got == {(1, "rel", 2, 0)}
 

@@ -164,74 +164,21 @@ def test_resume_skips_completed_stages(spark, corpus, tmp_path):
     assert stages == {"records", "mentions", "linked", "triples"}
 
 
-def test_fused_narrow_path_matches_granular(spark, corpus, pipeline_result, oracle_result):
-    """detect_records_from_pages + emit_triples_narrow == granular plan
-    == oracle, on every stage output."""
-    from knowledgeextraction_spark.operators.canonicalize import entity_component_map
-    from knowledgeextraction_spark.operators.link import surface_dictionary
-    from knowledgeextraction_spark.operators.triples import emit_triples_narrow
-
-    pages = fixture_pages(spark, corpus)
-    pipe = KGPipeline(
-        spark,
-        entities=entities_df(spark, corpus.entities),
-        rules=rules_df(spark, corpus.rules),
-        equivalences=equivalences_df(spark, corpus.equivalences),
-    )
-    rm = pipe.records_with_mentions(pages)
-    records, mentions = KGPipeline.split_records_mentions(rm)
-
-    oracle_records, oracle_mentions, oracle_triples = oracle_result
-    got_records = {(r["url"], r["rec_id"]): r["text"] for r in records.collect()}
-    assert got_records == oracle_records
-    got_m = {
-        (r["url"], r["rec_id"], r["start_pos"], r["end_pos"], r["label_type"], r["surface"])
-        for r in mentions.collect()
-    }
-    want_m = {
-        (m.url, m.rec_id, m.start_pos, m.end_pos, m.label_type, m.surface)
-        for m in oracle_mentions
-    }
-    assert got_m == want_m
-
-    cmap = entity_component_map(
-        equivalences_df(spark, corpus.equivalences),
-        surface_dictionary(entities_df(spark, corpus.entities)),
-    )
-    triples = emit_triples_narrow(
-        rm, rules_df(spark, corpus.rules), entities_df(spark, corpus.entities), cmap
-    )
-    got_t = {
-        (r["subj_id"], r["predicate"], r["obj_id"], r["url"], r["rec_id"])
-        for r in triples.collect()
-    }
-    want_t = {
-        (t.subj_id, t.predicate, t.obj_id, t.url, t.rec_id) for t in oracle_triples
-    }
-    assert got_t == want_t
-
-
-def test_digit_alias_narrow_granular_oracle_parity(spark, corpus):
+def test_digit_alias_narrow_oracle_parity(spark, corpus):
     """Digit-bearing mention surfaces link and emit triples identically
-    through the narrow plan, the granular plan, and the numpy oracle.
+    through the narrow plan, the linked stage and the numpy oracle.
 
-    Round-2 verdict finding #1: the narrow path joined RAW surfaces
-    against the digit-normalized dictionary, the granular path
-    normalized the mention side, and the fixture oracle did a raw dict
-    lookup — three conventions that agreed only while surfaces carried
-    no digits.  This fixture plants a mention whose raw surface is a
+    Raw and digit-normalized lookups agree only while surfaces carry no
+    digits, so this fixture plants a mention whose raw surface is a
     digit VARIANT ('…2') of a dictionary digit alias ('…1'): both
-    normalize to '…0', so all three paths must emit the triple."""
-    from pyspark.sql import functions as F
-
+    normalize to '…0', so every path must link it and emit the triple."""
     from knowledgeextraction_spark.operators.canonicalize import entity_component_map
-    from knowledgeextraction_spark.operators.detect import RECORDS_MENTIONS_SCHEMA
-    from knowledgeextraction_spark.operators.link import link_mentions, surface_dictionary
-    from knowledgeextraction_spark.operators.triples import (
-        canonicalized_triples,
-        emit_triples,
-        emit_triples_narrow,
+    from knowledgeextraction_spark.operators.detect import (
+        RECORDS_MENTIONS_SCHEMA,
+        explode_mentions,
     )
+    from knowledgeextraction_spark.operators.link import link_mentions, surface_dictionary
+    from knowledgeextraction_spark.operators.triples import emit_triples_narrow
     from knowledgeextraction_spark.oracle import pipeline as opl
 
     e0 = corpus.entities[0]  # carries digit aliases (generator post-step)
@@ -269,15 +216,6 @@ def test_digit_alias_narrow_granular_oracle_parity(spark, corpus):
         .collect()
     }
 
-    records, mentions = KGPipeline.split_records_mentions(rm)
-    linked = link_mentions(mentions, entities)
-    granular = {
-        tuple(r)
-        for r in canonicalized_triples(emit_triples(linked, records, rules), cmap)
-        .select("subj_id", "predicate", "obj_id", "url", "rec_id")
-        .collect()
-    }
-
     oracle_linked = opl.link_mentions(
         [
             opl.Mention("https://digit.test/p0", 0, s, e, t, surf)
@@ -300,7 +238,13 @@ def test_digit_alias_narrow_granular_oracle_parity(spark, corpus):
     }
 
     assert len(narrow) == 1, "digit-alias mention failed to link via the narrow path"
-    assert narrow == granular == oracle
+    assert narrow == oracle
+    linked = {
+        (r["start_pos"], r["entity_id"])
+        for r in link_mentions(explode_mentions(rm), entities).collect()
+    }
+    assert linked == {(m.start_pos, eid) for m, eid in oracle_linked}
+    assert len(linked) == 2
 
 
 def test_distributed_components_match_driver_path(spark, corpus):

@@ -4,9 +4,6 @@ import os
 
 
 def test_incremental_matches_batch(spark, corpus, tmp_path):
-    from knowledgeextraction_spark.operators.canonicalize import entity_component_map
-    from knowledgeextraction_spark.operators.link import surface_dictionary
-    from knowledgeextraction_spark.operators.triples import emit_triples_narrow
     from knowledgeextraction_spark.pipeline import KGPipeline
     from knowledgeextraction_spark.sources.pages import (
         entities_df,
@@ -50,15 +47,8 @@ def test_incremental_matches_batch(spark, corpus, tmp_path):
         rules=rules_df(spark, corpus.rules),
         equivalences=equivalences_df(spark, corpus.equivalences),
     )
-    rm = pipe.records_with_mentions(pages)
-    cmap = entity_component_map(
-        equivalences_df(spark, corpus.equivalences),
-        surface_dictionary(entities_df(spark, corpus.entities)),
-    )
     want = {
         (r["subj_id"], r["predicate"], r["obj_id"], r["url"], r["rec_id"])
-        for r in emit_triples_narrow(
-            rm, rules_df(spark, corpus.rules), entities_df(spark, corpus.entities), cmap
-        ).collect()
+        for r in pipe.run(pages).triples.collect()
     }
     assert got == want and len(got) > 0
