@@ -32,7 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _materialize, normalized_text
+from ..materialize import driver_rows, materialize
+from .dedup import normalized_text
 
 N_MERGES = 20
 END_MARK = "</w>"
@@ -146,14 +147,12 @@ def _train_on_freqs(
 def train_bpe(
     docs: DataFrame,
     n_merges: int = N_MERGES,
-    use_local_checkpoint: bool = True,
-    driver_vocab_rows: int = DRIVER_VOCAB_ROWS,
 ) -> list[tuple[int, str, str, int]]:
     """→ [(rank, left, right, freq)]: the learned merge sequence (at
     most ``n_merges`` — stops early when no pairs remain).
 
     The corpus is touched exactly once (the word-frequency groupBy).
-    Vocabularies of at most ``driver_vocab_rows`` distinct words then
+    Vocabularies of at most ``DRIVER_VOCAB_ROWS`` distinct words then
     train DRIVER-SIDE (``_train_on_freqs`` — one collect of the
     bounded vocab table, a python merge loop, no per-round Spark
     jobs); larger vocabularies run the distributed per-round loop
@@ -162,21 +161,17 @@ def train_bpe(
     sequence (pytest-asserted) — the integer argmax contract does not
     depend on where the loop runs."""
     wf = word_freq_table(docs)
-    if driver_vocab_rows > 0:
-        head = wf.limit(driver_vocab_rows + 1).collect()
-        if len(head) <= driver_vocab_rows:
-            return _train_on_freqs(
-                [(r["word"], r["freq"]) for r in head], n_merges
-            )
-        # vocabulary over budget — fall through to the distributed loop
-    vocab = _materialize(
+    head = driver_rows(wf, DRIVER_VOCAB_ROWS)
+    if head is not None:
+        return _train_on_freqs([(r["word"], r["freq"]) for r in head], n_merges)
+    # vocabulary over budget — fall through to the distributed loop
+    vocab = materialize(
         wf.select(
             F.concat(
                 F.split(F.col("word"), ""), F.array(F.lit(END_MARK))
             ).alias("syms"),
             "freq",
-        ),
-        use_local_checkpoint,
+        )
     )
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
@@ -190,9 +185,7 @@ def train_bpe(
             break
         a, b, f = best[0]["left"], best[0]["right"], best[0]["freq"]
         merges.append((rank, a, b, int(f)))
-        vocab = _materialize(
-            _apply_merge(vocab, a, b), use_local_checkpoint
-        )
+        vocab = materialize(_apply_merge(vocab, a, b))
     return merges
 
 
@@ -243,7 +236,6 @@ def encode_token_counts(
     docs: DataFrame,
     merges: list[tuple[int, str, str, int]] | None = None,
     n_merges: int = N_MERGES,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, n_words, n_bpe_tokens): the ENCODE step — apply the
     learned merge sequence (rank order) and count the resulting BPE
@@ -260,15 +252,14 @@ def encode_token_counts(
     outgrows a broadcast) and folds into one groupBy(doc_id).  The
     corpus stream never crosses the python boundary."""
     if merges is None:
-        merges = train_bpe(docs, n_merges, use_local_checkpoint)
+        merges = train_bpe(docs, n_merges)
     # the corpus-sized word stream feeds both the distinct-vocab branch
     # and the final join — cut the lineage so the scan+explode runs once
-    stream = _materialize(
+    stream = materialize(
         docs.select(
             "doc_id",
             F.explode(F.split(normalized_text(), " ")).alias("word"),
-        ).filter(F.length("word") > 0),
-        use_local_checkpoint,
+        ).filter(F.length("word") > 0)
     )
     vocab_tok = (
         stream.select("word")

@@ -14,9 +14,8 @@ Scale design:
 - each round = one shuffle join with the (symmetrized) edge list keyed
   by node + one self-join for the pointer jump; AQE skew-join splits
   hot component-root keys.
-- ``localCheckpoint`` every round cuts lineage (iterative plans
-  otherwise re-execute from scratch); on a real cluster use reliable
-  ``checkpoint()`` to object storage (resumability).
+- every round's parents are materialized (``materialize.py``): an
+  iterative plan otherwise re-executes from scratch.
 - convergence: per-node parents are monotonically non-increasing node
   ids, so ``sum(parent)`` is strictly decreasing until fixpoint —
   a cheap scalar aggregate per round, no diff join.
@@ -30,20 +29,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# DRIVER_MAX_EDGES is read as mz.DRIVER_MAX_EDGES at call time, so a
+# test can patch it to force the distributed loop
+from .. import materialize as mz
+from ..materialize import driver_rows, materialize
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return edges.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
+def _driver_components(edge_rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
     """Union-find on the driver for dimension-scale edge sets.
 
     An iterative distributed CC over a 300-row graph costs ~6 blocking
     shuffle rounds; a dictionary-sized graph is driver work. The
-    distributed path below stays the scale path (and is what tests
-    exercise with driver_threshold=0)."""
-    spark = edges.sparkSession
+    distributed path below stays the scale path (tests force it by
+    setting ``DRIVER_MAX_EDGES`` to 0)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -53,36 +56,35 @@ def _driver_components(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for row in edges.collect():
-        a, b = find(row[0]), find(row[1])
+    for s, d in edge_rows:
+        if s == d:
+            continue  # self-loops add no node, as in _symmetrize
+        a, b = find(s), find(d)
         if a != b:
             parent[max(a, b)] = min(a, b)
-    rows = [(n, find(n)) for n in list(parent)]
-    if not rows:
-        return spark.createDataFrame([], "id long, component long")
-    return spark.createDataFrame(rows, "id long, component long")
+    return [(n, find(n)) for n in list(parent)]
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 30,
-    use_local_checkpoint: bool = True,
-    driver_threshold: int = 100_000,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     """edges(src long, dst long) undirected → (id long, component long).
 
     component = min node id reachable. Nodes appear iff they touch an
     edge (callers union isolated nodes back with component = own id).
-    Edge sets at or below ``driver_threshold`` are solved with driver
-    union-find (adaptive local-vs-distributed, exact same result);
-    larger graphs run the iterative min-label-propagation below.
+    Edge sets of at most ``DRIVER_MAX_EDGES`` rows are solved with
+    driver union-find (adaptive local-vs-distributed, exact same
+    result); larger graphs run the iterative min-label-propagation
+    below.  The edges are materialized first, so the size probe, the
+    driver collect and the distributed rounds run the caller's
+    upstream plan once.
     """
-    if driver_threshold > 0 and edges.limit(driver_threshold + 1).count() <= driver_threshold:
-        return _driver_components(edges.filter(F.col("src") != F.col("dst")))
+    edges = materialize(edges.select("src", "dst"))
+    rows = driver_rows(edges, mz.DRIVER_MAX_EDGES)
+    if rows is not None:
+        return edges.sparkSession.createDataFrame(
+            _driver_components(rows), "id long, component long"
+        )
 
-    adj = _symmetrize(edges)
-    if use_local_checkpoint:
-        adj = adj.localCheckpoint(eager=True)
+    adj = materialize(_symmetrize(edges))
     parent = (
         adj.select(F.col("src").alias("id"))
         .distinct()
@@ -102,12 +104,10 @@ def connected_components(
         gp = p1.select(
             F.col("id").alias("parent"), F.col("parent").alias("gparent")
         )
-        p2 = (
+        p2 = materialize(
             p1.join(gp, "parent", "left")
             .select("id", F.coalesce("gparent", "parent").alias("parent"))
         )
-        if use_local_checkpoint:
-            p2 = p2.localCheckpoint(eager=True)
 
         cur_sum = p2.agg(F.sum("parent")).collect()[0][0]
         parent = p2

@@ -30,6 +30,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 N_BANDS = 8
 SHINGLE = 3  # word 3-grams
 # default per-(band, sig) bucket cap for the LSH candidate joins: a
@@ -112,19 +114,6 @@ def join_in_order(collected, field: str, sep: str):
     return F.array_join(
         F.transform(F.array_sort(collected), lambda x: x[field]), sep
     )
-
-
-def _materialize(df: DataFrame, use_local_checkpoint: bool) -> DataFrame:
-    """Lineage cut for a multiply-referenced frame (the triangle_count
-    lesson: un-cut, every plan reference re-runs the whole upstream).
-
-    ``localCheckpoint`` is EAGER (runs a Spark job at call time) and
-    pins blocks to local executors — non-recoverable on executor loss.
-    Cluster callers that need recoverability, or a pure lazy plan
-    builder, pass ``use_local_checkpoint=False`` and substitute
-    reliable ``checkpoint()``/persist on their own input — the same
-    escape hatch as graph.py's flag."""
-    return df.localCheckpoint(eager=True) if use_local_checkpoint else df
 
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:
@@ -302,7 +291,6 @@ def lsh_candidate_pairs(
     n_bands: int = N_BANDS,
     shingles: DataFrame | None = None,
     max_bucket: int | None = MAX_BUCKET,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_a, doc_b) distinct candidate pairs sharing any band bucket.
 
@@ -316,7 +304,7 @@ def lsh_candidate_pairs(
     # the signature table has up to 4 plan references below (bucket
     # count, its join probe, and both self-join sides) — materialize it
     # once or every reference re-runs the scan→shingle→min-agg upstream
-    sig = _materialize(sig, use_local_checkpoint)
+    sig = materialize(sig)
     if max_bucket is not None:
         sig = _cap_buckets(sig, ["band", "sig"], max_bucket)
     a = sig.select(F.col("doc_id").alias("doc_a"), "band", "sig")
@@ -444,7 +432,6 @@ def simhash_near_pairs(
     bits: int = 60,
     n_bands: int = 4,
     max_bucket: int | None = MAX_BUCKET,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_a, doc_b, hamming): pairs whose simhashes differ in at
     most ``max_hamming`` bits — the pigeonhole band join that turns the
@@ -488,7 +475,7 @@ def simhash_near_pairs(
     ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval"))
     # same reuse shape as lsh_candidate_pairs: materialize once for the
     # cap + both self-join sides, or each re-runs the simhash groupBy
-    keys = _materialize(keys, use_local_checkpoint)
+    keys = materialize(keys)
     if max_bucket is not None:
         keys = _cap_buckets(keys, ["band", "bval"], max_bucket)
 
@@ -515,7 +502,6 @@ def embedding_near_dups_lsh(
     dim: int = 64,
     seed: int = 42,
     max_bucket: int | None = None,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (vec_a, vec_b, cosine): near-dup pairs via LSH bucketing — the
     PRODUCTION path (the brute-force variant below is its recall oracle
@@ -553,10 +539,7 @@ def embedding_near_dups_lsh(
     # r06): one map-side-combinable groupBy, materialized once because
     # it feeds the keying UDF, BOTH cosine sides, and the star join
     # (the triangle_count lesson)
-    rep_map = _materialize(
-        e.groupBy("embedding").agg(F.min("vec_id").alias("rep_id")),
-        use_local_checkpoint,
-    )
+    rep_map = materialize(e.groupBy("embedding").agg(F.min("vec_id").alias("rep_id")))
     reps = rep_map.select(F.col("rep_id").alias("vec_id"), "embedding")
     star = (
         e.join(rep_map, "embedding")
@@ -569,11 +552,10 @@ def embedding_near_dups_lsh(
     )
 
     planes = make_planes(dim, n_bands * bits_per_band, seed)
-    keys = _materialize(
+    keys = materialize(
         lsh_band_keys(reps, planes, n_bands, bits_per_band).select(
             "vec_id", "band", "bucket"
-        ),
-        use_local_checkpoint,
+        )
     )
     if max_bucket is not None:
         keys = _cap_buckets(keys, ["band", "bucket"], max_bucket)
@@ -680,7 +662,6 @@ def duplicated_spans(
     docs: DataFrame,
     n: int = DUP_SPAN_K,
     min_docs: int = MIN_DUP_DOCS,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, start_word, end_word): maximal word spans (0-based,
     inclusive) covered by n-grams that occur in >= ``min_docs``
@@ -694,7 +675,7 @@ def duplicated_spans(
     ``repetition_stats`` owns the within-doc signal)."""
     from pyspark.sql import Window
 
-    pg = _materialize(positional_shingle_table(docs, n), use_local_checkpoint)
+    pg = materialize(positional_shingle_table(docs, n))
     dup_g = (
         pg.select("gram", "doc_id")
         .distinct()
@@ -721,13 +702,12 @@ def dup_span_stats(
     docs: DataFrame,
     n: int = DUP_SPAN_K,
     min_docs: int = MIN_DUP_DOCS,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, n_spans, dup_words, total_words, dup_word_frac): one
     row per input doc (zero-filled when nothing is duplicated) — the
     per-doc verdict a span-dedup pass gates on (e.g. drop or trim docs
     whose dup_word_frac exceeds a budget)."""
-    spans = duplicated_spans(docs, n, min_docs, use_local_checkpoint)
+    spans = duplicated_spans(docs, n, min_docs)
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_spans"),
         F.sum(F.col("end_word") - F.col("start_word") + 1)
@@ -781,7 +761,6 @@ def host_boilerplate_stats(
     docs: DataFrame,
     min_docs: int = BOILER_MIN_DOCS,
     pct: int = BOILER_PCT,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, source, n_lines, n_boiler, boiler_frac, cleaned):
     per doc, total line count, the number of lines flagged as source
@@ -793,12 +772,11 @@ def host_boilerplate_stats(
     ``n_lines``.  Input needs (doc_id, source, text).
 
     The exploded line stream feeds both the count and the reassembly —
-    materialized once (``use_local_checkpoint`` — the dedup escape
-    hatch convention)."""
+    materialized once."""
     # coalesce: a null-text doc must still emit its (empty-line) row —
     # split(NULL) explodes to nothing, which would both drop the doc
     # from the output AND leave it inflating the src_docs denominator
-    lines = _materialize(
+    lines = materialize(
         docs.select(
             "doc_id",
             "source",
@@ -807,8 +785,7 @@ def host_boilerplate_stats(
             ).alias("pos", "raw"),
         ).select(
             "doc_id", "source", "pos", normalized_line(F.col("raw")).alias("line")
-        ),
-        use_local_checkpoint,
+        )
     )
     src_docs = docs.groupBy("source").agg(
         F.countDistinct("doc_id").alias("src_docs")
@@ -854,7 +831,6 @@ def remove_duplicated_spans(
     docs: DataFrame,
     n: int = DUP_SPAN_K,
     min_docs: int = MIN_DUP_DOCS,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, total_words, removed_words, cleaned): the REMOVE half
     of ExactSubstr dedup (Lee et al. 2021 drop the shared substring
@@ -870,7 +846,7 @@ def remove_duplicated_spans(
     bounded — + one groupBy(doc_id) reassembly.  Linear; no pair
     enumeration anywhere (the span table itself is the linear
     dedup_spans shape)."""
-    spans = duplicated_spans(docs, n, min_docs, use_local_checkpoint)
+    spans = duplicated_spans(docs, n, min_docs)
     words = docs.select(
         "doc_id",
         F.posexplode(F.split(normalized_text(), " ")).alias("pos", "word"),

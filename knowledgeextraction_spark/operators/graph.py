@@ -46,6 +46,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# DRIVER_MAX_EDGES is read as mz.DRIVER_MAX_EDGES at call time, so a
+# test can patch it to force the distributed loop
+from .. import materialize as mz
+from ..materialize import driver_rows, materialize
+
 PR_DAMPING = 0.85
 PR_ITERS = 10
 PR_ROUND_DP = 10
@@ -114,21 +119,12 @@ def _driver_pagerank(
     return [(node, float(rank[idx[node]])) for node in nodes]
 
 
-# adaptive driver-vs-distributed bound, the connected_components
-# driver_threshold convention: below this many edges the iterative
-# barriers cost more than the whole computation
-PR_DRIVER_THRESHOLD = 100_000
-
-
 def pagerank(
     edges: DataFrame,
     damping: float = PR_DAMPING,
     n_iter: int = PR_ITERS,
     round_dp: int = PR_ROUND_DP,
-    use_local_checkpoint: bool = True,
     redistribute_dangling: bool = False,
-    checkpoint_every: int = 1,
-    driver_threshold: int = PR_DRIVER_THRESHOLD,
 ) -> DataFrame:
     """edges(src long, dst long), directed + deduped, self-loops
     excluded by the caller → (id long, rank double).
@@ -152,22 +148,10 @@ def pagerank(
     one groupBy(dst) contribution sum with map-side partial
     aggregation.  The edges⋈outdeg join is LOOP-INVARIANT, so it is
     materialized once before the loop — joining outdeg inside would
-    re-shuffle the N-row degree table every round.
-    ``localCheckpoint`` per round cuts the iterative plan's lineage
-    exactly as in connected_components; use reliable ``checkpoint()``
-    on a cluster for resumability.  ``checkpoint_every`` trades barrier
-    count against lineage depth: at ``e`` the materialization job (a
-    full scheduling barrier + rank write) runs every ``e`` rounds, with
-    the in-between rounds composed lazily — total shuffle work is
-    unchanged (each round still executes once, inside the next
-    materialization), but an iterative job whose per-round data is
-    small relative to the barrier cost does ``1/e`` as many driver
-    round-trips.  Values are unaffected (the per-round quantization is
-    in the PLAN, not the materialization).  Keep ``e`` small: the rank
-    frame is referenced twice per round when ``redistribute_dangling``
-    (contribution join + dangling anti-join), so the lazy plan segment
-    grows ~2^e — e=2 is the sweet spot, e>3 re-inflates the plan the
-    lineage cut exists to bound.
+    re-shuffle the N-row degree table every round.  Each round's rank
+    is materialized, cutting the iterative plan's lineage exactly as in
+    connected_components.  Edge sets of at most ``DRIVER_MAX_EDGES``
+    rows run the same recurrence in ``_driver_pagerank``.
 
     ``redistribute_dangling=True`` runs the full PageRank variant:
     each round the rank mass sitting on dangling nodes (no out-edges)
@@ -182,61 +166,37 @@ def pagerank(
     across engines — a probabilistic, not absolute, guarantee that
     grows with N (the dangling sum is O(N), so its ulp noise is too).
     """
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    edges = edges.select("src", "dst")
-    edges_cut = False
-    if use_local_checkpoint and driver_threshold > 0:
-        # materialize FIRST (upstream runs once), then probe the size:
-        # dimension-scale graphs take the driver loop (zero per-round
-        # barriers), everything else falls through to the distributed
-        # rounds below — same adaptive shape as connected_components
-        edges = edges.localCheckpoint(eager=True)
-        edges_cut = True
-        if edges.limit(driver_threshold + 1).count() <= driver_threshold:
-            rows = _driver_pagerank(
-                [(r[0], r[1]) for r in edges.collect()],
-                damping,
-                n_iter,
-                round_dp,
-                redistribute_dangling,
-            )
-            return edges.sparkSession.createDataFrame(
-                rows, "id long, rank double"
-            )
-    if use_local_checkpoint and not edges_cut:
-        # Materializing raw edges FIRST means the caller's upstream plan
-        # (for the entity graph: the whole triples pipeline) executes
-        # exactly once, even though three derived frames reference it.
-        # Cost: these blocks stay pinned alongside edges_deg's for the
-        # job (an extra E-row MEMORY_AND_DISK copy — evictable to disk);
-        # the alternative, deriving edges_deg straight from the lazy
-        # plan, re-runs the upstream once per branch inside the
-        # materialization job, which is strictly worse for any upstream
-        # that costs more than an edge-list scan.  On a cluster,
-        # reliable checkpoint() + unpersisting the raw-edge stage after
-        # setup releases the copy.
-        edges = edges.localCheckpoint(eager=True)
+    # Materializing raw edges FIRST means the caller's upstream plan
+    # (for the entity graph: the whole triples pipeline) executes
+    # exactly once, even though the size probe and three derived
+    # frames reference it.  Cost: these blocks stay pinned alongside
+    # edges_deg's for the job (an extra E-row MEMORY_AND_DISK copy —
+    # evictable to disk); the alternative, deriving edges_deg straight
+    # from the lazy plan, re-runs the upstream once per branch, which
+    # is strictly worse for any upstream that costs more than an
+    # edge-list scan.
+    edges = materialize(edges.select("src", "dst"))
+    rows = driver_rows(edges, mz.DRIVER_MAX_EDGES)
+    if rows is not None:
+        return edges.sparkSession.createDataFrame(
+            _driver_pagerank(rows, damping, n_iter, round_dp, redistribute_dangling),
+            "id long, rank double",
+        )
     # nodes and outdeg are joined EVERY round — materialize them once,
     # or each iteration re-runs their distinct/groupBy shuffles from
     # the edge list (10 redundant shuffles at the default iteration
     # count)
-    nodes = _edge_nodes(edges)
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    if use_local_checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
-        outdeg = outdeg.localCheckpoint(eager=True)
-    edges_deg = edges.join(outdeg, "src")
-    if use_local_checkpoint:
-        edges_deg = edges_deg.localCheckpoint(eager=True)
+    nodes = materialize(_edge_nodes(edges))
+    outdeg = materialize(edges.groupBy("src").agg(F.count("*").alias("deg")))
+    edges_deg = materialize(edges.join(outdeg, "src"))
     teleport = 1.0 - damping
     n_frame = None
     if redistribute_dangling:
-        n_frame = nodes.agg(F.count("*").cast("double").alias("n_nodes"))
-        if use_local_checkpoint:
-            n_frame = n_frame.localCheckpoint(eager=True)
+        n_frame = materialize(
+            nodes.agg(F.count("*").cast("double").alias("n_nodes"))
+        )
     rank = nodes.withColumn("rank", F.lit(1.0))
-    for it in range(n_iter):
+    for _ in range(n_iter):
         contribs = (
             edges_deg.join(rank.withColumnRenamed("id", "src"), "src")
             .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
@@ -257,22 +217,18 @@ def pagerank(
             )
             merged = merged.crossJoin(F.broadcast(dang))
             inflow = inflow + F.col("dang") / F.col("n_nodes")
-        rank = merged.select(
-            "id",
-            F.round(
-                F.lit(teleport) + F.lit(damping) * inflow, round_dp
-            ).alias("rank"),
+        rank = materialize(
+            merged.select(
+                "id",
+                F.round(
+                    F.lit(teleport) + F.lit(damping) * inflow, round_dp
+                ).alias("rank"),
+            )
         )
-        if use_local_checkpoint and (
-            (it + 1) % checkpoint_every == 0 or it == n_iter - 1
-        ):
-            rank = rank.localCheckpoint(eager=True)
     return rank
 
 
-def khop_counts(
-    edges: DataFrame, k: int = 2, use_local_checkpoint: bool = True
-) -> DataFrame:
+def khop_counts(edges: DataFrame, k: int = 2) -> DataFrame:
     """edges(src long, dst long), directed, self-loops excluded by the
     caller → (id long, reach long): number of DISTINCT nodes reachable
     in 1..k directed hops (excluding the node itself) — the standard
@@ -286,20 +242,18 @@ def khop_counts(
     belongs to the pregel-style loop with convergence checks
     (connected_components).
     """
-    edges = edges.select("src", "dst")
-    if use_local_checkpoint:
-        edges = edges.localCheckpoint(eager=True)
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    edges = materialize(edges.select("src", "dst"))
     reach = edges
     frontier = edges
     for _ in range(k - 1):
-        frontier = (
+        frontier = materialize(
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
             .select(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
             .distinct()
         )
-        if use_local_checkpoint:
-            frontier = frontier.localCheckpoint(eager=True)
         reach = reach.unionByName(frontier)
     counts = (
         reach.filter(F.col("src") != F.col("dst"))
@@ -400,8 +354,6 @@ def kmv_reach_counts(
     edges: DataFrame,
     k: int = 2,
     kmv_k: int = KMV_K,
-    use_local_checkpoint: bool = True,
-    driver_threshold: int = PR_DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Scale-safe k-hop reachability: ``khop_counts`` semantics —
     (id long, reach long), distinct nodes reachable in 1..k directed
@@ -438,38 +390,35 @@ def kmv_reach_counts(
     ``khop_counts`` as the fixture-scale oracle; tests bound the
     sketch-vs-exact relative error.
     """
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if kmv_k < 2:
+        raise ValueError(f"kmv_k must be >= 2, got {kmv_k}")
     cap = kmv_k + 1
-    edges = edges.select("src", "dst")
-    if use_local_checkpoint:
-        edges = edges.localCheckpoint(eager=True)
-        if (
-            driver_threshold > 0
-            and edges.limit(driver_threshold + 1).count() <= driver_threshold
-        ):
-            rows = _driver_kmv_reach(
-                [(r[0], r[1]) for r in edges.collect()], k, kmv_k
-            )
-            return edges.sparkSession.createDataFrame(
-                rows, "id long, reach long"
-            )
+    edges = materialize(edges.select("src", "dst"))
+    rows = driver_rows(edges, mz.DRIVER_MAX_EDGES)
+    if rows is not None:
+        return edges.sparkSession.createDataFrame(
+            _driver_kmv_reach(rows, k, kmv_k), "id long, reach long"
+        )
     nodes = _edge_nodes(edges)
     hashes = nodes.select("id", F.md5(F.col("id").cast("string")).alias("hv"))
-    sketch = _kmv_truncate(
-        edges.join(hashes.withColumnRenamed("id", "dst"), "dst")
-        .select(F.col("src").alias("id"), "hv")
-        .distinct(),
-        cap,
+    sketch = materialize(
+        _kmv_truncate(
+            edges.join(hashes.withColumnRenamed("id", "dst"), "dst")
+            .select(F.col("src").alias("id"), "hv")
+            .distinct(),
+            cap,
+        )
     )
-    if use_local_checkpoint:
-        sketch = sketch.localCheckpoint(eager=True)
     for _ in range(k - 1):
         prop = (
             edges.join(sketch.withColumnRenamed("id", "dst"), "dst")
             .select(F.col("src").alias("id"), "hv")
         )
-        sketch = _kmv_truncate(sketch.unionByName(prop).distinct(), cap)
-        if use_local_checkpoint:
-            sketch = sketch.localCheckpoint(eager=True)
+        sketch = materialize(
+            _kmv_truncate(sketch.unionByName(prop).distinct(), cap)
+        )
     n_all = sketch.groupBy("id").agg(F.count("*").alias("n_all"))
     nonself = (
         sketch.join(hashes.select("id", F.col("hv").alias("self_hv")), "id")
@@ -532,8 +481,6 @@ def kcore_members(
     edges: DataFrame,
     k: int = KCORE_K,
     max_rounds: int = KCORE_MAX_ROUNDS,
-    use_local_checkpoint: bool = True,
-    driver_threshold: int = PR_DRIVER_THRESHOLD,
 ) -> DataFrame:
     """edges(src long, dst long), treated as UNDIRECTED → (id long,
     in_core boolean): membership in the k-core (the maximal subgraph
@@ -553,64 +500,48 @@ def kcore_members(
     contract stays exact even if a pathological graph is still peeling
     at the cap.  Determinism: survivors are a pure set function of the
     edge set — no ordering, no floats — so the DuckDB mirror matches
-    bit-for-bit.  Lineage is cut per round exactly as in pagerank; use
-    reliable ``checkpoint()`` on a cluster.
+    bit-for-bit.  Lineage is cut per round exactly as in pagerank.
     """
-    # r5 ADVICE: max_rounds=0 would skip the peel and return every
-    # edge-touching node with in_core=True — silently wrong; fail loud
-    # (the pagerank checkpoint_every validation pattern)
+    # max_rounds=0 would skip the peel and return every edge-touching
+    # node with in_core=True — silently wrong; fail loud
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    raw = edges.select("src", "dst")
-    if use_local_checkpoint and driver_threshold > 0:
-        # adaptive driver peel (the pagerank r06 shape): materialize
-        # the caller's upstream once, probe the size, and run
-        # dimension-scale graphs as a python loop — exact (integer
-        # set function, no quantization involved)
-        raw = raw.localCheckpoint(eager=True)
-        if raw.limit(driver_threshold + 1).count() <= driver_threshold:
-            rows = _driver_kcore(
-                [(r[0], r[1]) for r in raw.collect()], k, max_rounds
-            )
-            return raw.sparkSession.createDataFrame(
-                rows, "id long, in_core boolean"
-            )
-    und = (
+    raw = materialize(edges.select("src", "dst"))
+    rows = driver_rows(raw, mz.DRIVER_MAX_EDGES)
+    if rows is not None:
+        return raw.sparkSession.createDataFrame(
+            _driver_kcore(rows, k, max_rounds), "id long, in_core boolean"
+        )
+    und = materialize(
         raw.unionByName(
             raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    if use_local_checkpoint:
-        und = und.localCheckpoint(eager=True)
     # symmetric edge set ⇒ src alone covers every edge-touching node
     nodes = und.select(F.col("src").alias("id")).distinct()
     alive = und
     keep = nodes
     prev_n = None
     for _ in range(max_rounds):
-        keep = (
+        keep = materialize(
             alive.groupBy("src")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= k)
             .select(F.col("src").alias("id"))
         )
-        if use_local_checkpoint:
-            keep = keep.localCheckpoint(eager=True)
         n = keep.count()
         if n == prev_n:
             break  # nothing peeled this round — fixpoint
         prev_n = n
-        alive = (
+        alive = materialize(
             alive.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
             .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "dst")
         )
-        if use_local_checkpoint:
-            alive = alive.localCheckpoint(eager=True)
     return nodes.join(
         keep.withColumn("in_core", F.lit(True)), "id", "left"
     ).select("id", F.coalesce("in_core", F.lit(False)).alias("in_core"))
@@ -639,11 +570,7 @@ def _driver_triangles(
     return [(n, tri.get(n, 0)) for n in nodes]
 
 
-def triangle_count(
-    edges: DataFrame,
-    use_local_checkpoint: bool = True,
-    driver_threshold: int = PR_DRIVER_THRESHOLD,
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """edges(src long, dst long), treated as UNDIRECTED → (id long,
     triangles long): number of triangles each node participates in.
 
@@ -661,26 +588,21 @@ def triangle_count(
     each reference re-expands the caller's full upstream plan — for
     the triples graph that would re-run model inference 3× (the first
     plan_audit of this query showed 529 exchanges).  Same remedy as
-    pagerank's per-round checkpoint; use reliable ``checkpoint()`` on
-    a cluster.
+    pagerank's per-round cut.
     """
-    raw = edges.select("src", "dst")
-    if use_local_checkpoint and driver_threshold > 0:
-        raw = raw.localCheckpoint(eager=True)
-        if raw.limit(driver_threshold + 1).count() <= driver_threshold:
-            rows = _driver_triangles([(r[0], r[1]) for r in raw.collect()])
-            return raw.sparkSession.createDataFrame(
-                rows, "id long, triangles long"
-            )
-    und = (
+    raw = materialize(edges.select("src", "dst"))
+    rows = driver_rows(raw, mz.DRIVER_MAX_EDGES)
+    if rows is not None:
+        return raw.sparkSession.createDataFrame(
+            _driver_triangles(rows), "id long, triangles long"
+        )
+    und = materialize(
         raw.unionByName(
             raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    if use_local_checkpoint:
-        und = und.localCheckpoint(eager=True)
     fwd = und.filter(F.col("src") < F.col("dst"))
     ab = fwd.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = fwd.select(F.col("src").alias("b"), F.col("dst").alias("c"))

@@ -30,10 +30,13 @@ two-stage quantization pattern), so engine-order float-sum drift is
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _materialize, normalized_text, word_count
+from ..materialize import materialize
+from .dedup import normalized_text, word_count
 
 N_BUCKETS = 1024
 ALPHA = 1.0  # add-alpha smoothing over the bucket space
@@ -109,7 +112,6 @@ def importance_weights(
     target: DataFrame,
     ngram_max: int = 2,
     alpha: float = ALPHA,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, n_grams, logw): per raw-corpus doc, the DSIR log
     importance weight Σ_b c_b · [ln p_target(b) − ln p_raw(b)] over
@@ -124,17 +126,15 @@ def importance_weights(
 
     The raw gram stream (the big frame — one row per word n-gram
     occurrence) is consumed exactly ONCE: it folds into the per-doc
-    bucket counts, which are materialized (``use_local_checkpoint`` —
-    the dedup.py escape-hatch convention) and from which both the raw
+    bucket counts, which are materialized and from which both the raw
     bucket distribution and the raw total re-aggregate (B-bounded /
     scalar, map-side combinable) instead of re-running the
     scan→explode upstream per reference."""
     B = N_BUCKETS
-    per_doc = _materialize(
+    per_doc = materialize(
         hashed_grams(raw, ngram_max)
         .groupBy("doc_id", "bucket")
-        .agg(F.count("*").alias("c")),
-        use_local_checkpoint,
+        .agg(F.count("*").alias("c"))
     )
     raw_dist = per_doc.groupBy("bucket").agg(
         F.sum("c").cast("long").alias("r_cnt")
@@ -178,9 +178,7 @@ def importance_weights(
     )
 
 
-def select_top_k(
-    weights: DataFrame, k: int, use_local_checkpoint: bool = True
-) -> DataFrame:
+def select_top_k(weights: DataFrame, k: int) -> DataFrame:
     """→ weights + ``selected``: deterministic top-k by (logw desc,
     doc_id asc) — the resampling step made reproducible (the paper
     adds Gumbel noise; a seeded variant belongs to the caller).  The
@@ -188,7 +186,7 @@ def select_top_k(
     of the corpus) and broadcasts back onto the full frame, which is
     materialized first (both branches read it — un-cut, the whole
     weight DAG would run twice)."""
-    weights = _materialize(weights, use_local_checkpoint)
+    weights = materialize(weights)
     top = (
         weights.orderBy(F.desc("logw"), F.asc("doc_id"))
         .limit(k)
@@ -211,7 +209,6 @@ DOMAIN_WORD_BUDGET = 1000
 def domain_sample(
     docs: DataFrame,
     budget_words: int = DOMAIN_WORD_BUDGET,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, source, n_words, frac, sampled): deterministic
     per-domain downsampling to a word budget (the Dolma/C4 "don't let
@@ -229,9 +226,8 @@ def domain_sample(
     rounded to 6 dp but compared unrounded."""
     # sized feeds both the per-source agg and the final join — cut the
     # lineage so the scan + normalize + split runs once, not twice
-    sized = _materialize(
-        docs.select("doc_id", "source", word_count().alias("n_words")),
-        use_local_checkpoint,
+    sized = materialize(
+        docs.select("doc_id", "source", word_count().alias("n_words"))
     )
     per_source = sized.groupBy("source").agg(
         F.sum("n_words").alias("src_words")
@@ -356,7 +352,6 @@ def bigram_lm_nll(
     train: DataFrame,
     score: DataFrame,
     alpha: float = LM_ALPHA,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, n_bigrams, nll): per ``score`` doc, the mean
     add-alpha bigram negative log-likelihood under counts from
@@ -373,17 +368,15 @@ def bigram_lm_nll(
         # sums — identical values to counting the raw stream); the
         # former shape scanned + exploded the corpus twice (r06, the
         # dsir importance_weights consumed-once pattern)
-        doc_counts = _materialize(
+        doc_counts = materialize(
             _bigram_occurrences(score)
             .groupBy("doc_id", "w1", "w2")
-            .agg(F.count("*").cast("long").alias("c")),
-            use_local_checkpoint,
+            .agg(F.count("*").cast("long").alias("c"))
         )
-        bc = _materialize(
+        bc = materialize(
             doc_counts.groupBy("w1", "w2").agg(
                 F.sum("c").cast("long").alias("bc")
-            ),
-            use_local_checkpoint,
+            )
         )
     else:
         doc_counts = (
@@ -391,11 +384,10 @@ def bigram_lm_nll(
             .groupBy("doc_id", "w1", "w2")
             .agg(F.count("*").cast("long").alias("c"))
         )
-        bc = _materialize(
+        bc = materialize(
             _bigram_occurrences(train)
             .groupBy("w1", "w2")
-            .agg(F.count("*").cast("long").alias("bc")),
-            use_local_checkpoint,
+            .agg(F.count("*").cast("long").alias("bc"))
         )
     uc = bc.groupBy("w1").agg(F.sum("bc").cast("long").alias("uc"))
     vocab = bc.agg(F.countDistinct("w2").cast("long").alias("v"))
@@ -424,9 +416,7 @@ def bigram_lm_nll(
     )
 
 
-def nll_terciles(
-    scores: DataFrame, use_local_checkpoint: bool = True
-) -> DataFrame:
+def nll_terciles(scores: DataFrame) -> DataFrame:
     """→ scores + ``bucket``: head / middle / tail by EXACT terciles of
     the 4-dp-quantized nll distribution (head = lowest perplexity, the
     CCNet keep set).  The histogram groupBy is bounded by the 1e-4
@@ -438,7 +428,7 @@ def nll_terciles(
     join all read it."""
     from pyspark.sql import Window
 
-    scores = _materialize(scores, use_local_checkpoint)
+    scores = materialize(scores)
     hist = scores.groupBy("nll").agg(F.count("*").cast("long").alias("c"))
     w = Window.orderBy("nll").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -584,7 +574,6 @@ def quality_lr_scores(
     n_iter: int = LR_ITERS,
     lr: float = LR_RATE,
     ngram_max: int = 2,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_id, score, prob): per-doc logistic margin and probability
     after ``n_iter`` preconditioned full-batch gradient rounds of
@@ -619,7 +608,7 @@ def quality_lr_scores(
         F.collect_list(F.struct("bucket", "c")).alias("bx"),
         F.sum("c").alias("n"),
     )
-    featA = _materialize(
+    featA = materialize(
         labels.join(arr, "doc_id", "left")
         .select(
             "doc_id",
@@ -645,8 +634,7 @@ def quality_lr_scores(
         # exchange lets AQE coalesce to the advisory size — few
         # partitions on small inputs, many at scale (measured: ~1.3 s
         # across the 12 rounds at sf0.1)
-        .repartition("doc_id"),
-        use_local_checkpoint,
+        .repartition("doc_id")
     )
     # labels cover every doc and every doc carries the bias feature,
     # so featA has exactly one row per doc — N collected as an exact
@@ -733,7 +721,15 @@ def quality_lr_scores(
         the array-literal build bit-equal on every fixture row —
         pytest).  repr() doubles round-trip exactly through Jackson's
         correctly-rounded parse; the declared array<double> schema
-        pins the type (no DECIMAL inference)."""
+        pins the type (no DECIMAL inference).  A non-finite weight
+        raises: its repr is not JSON, and from_json would silently
+        turn every score into NULL."""
+        for b, w in w_map.items():
+            if not math.isfinite(w):
+                raise ValueError(
+                    f"classifier weight for bucket {b} is {w!r}: "
+                    "training diverged (lower lr)"
+                )
         js = "[" + ",".join(
             repr(w_map.get(b, 0.0)) for b in range(-1, N_BUCKETS)
         ) + "]"

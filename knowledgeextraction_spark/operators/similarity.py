@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 
 def _cosine(e1, e2):
     dot = F.aggregate(F.zip_with(e1, e2, lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v)
@@ -293,7 +295,7 @@ def lsh_topk(
         # cb is referenced twice below (bucket sizes + the capped join
         # probe) — materialize it once or the hyperplane-GEMM keying
         # UDF runs twice over the corpus
-        cb = cb.localCheckpoint(eager=True)
+        cb = materialize(cb)
         sizes = cb.groupBy("band", "bucket").agg(F.count("*").alias("n"))
         keep = sizes.filter(F.col("n") <= max_bucket).select("band", "bucket")
         cb = cb.join(keep, ["band", "bucket"])

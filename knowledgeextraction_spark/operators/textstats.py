@@ -354,7 +354,6 @@ def winnow_overlap_pairs(
     docs: DataFrame,
     min_shared: int = WINNOW_MIN_SHARED,
     max_bucket: int = WINNOW_PAIR_CAP,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """→ (doc_a, doc_b, shared_fps): document pairs sharing at least
     ``min_shared`` winnowed fingerprints — the MOSS report step
@@ -370,11 +369,11 @@ def winnow_overlap_pairs(
     common vocabulary, not plagiarism, and would otherwise cost a
     quadratic pair set).  One groupBy(doc_a, doc_b) folds the shared
     count."""
-    from .dedup import _cap_buckets, _materialize
+    from ..materialize import materialize
+    from .dedup import _cap_buckets
 
-    fp = _materialize(
-        _cap_buckets(winnow_fingerprints(docs), ["fingerprint"], max_bucket),
-        use_local_checkpoint,
+    fp = materialize(
+        _cap_buckets(winnow_fingerprints(docs), ["fingerprint"], max_bucket)
     )
     a, b = fp.alias("a"), fp.alias("b")
     return (

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .broadcast import weights_broadcast
+from .materialize import materialize, sorted_output
 from .operators import dedup, selection, similarity, textstats
 from .operators.conlleval import conll_eval
 from .operators.segment import packed_records, sentence_table
@@ -29,23 +30,6 @@ from .sources import pages as pages_src
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
-
-
-def _ck_sort(df: DataFrame, *cols) -> DataFrame:
-    """Declared-output sort over a materialized child (r06, guide
-    §3.3/§7.2): ``orderBy`` compiles to an Exchange rangepartitioning
-    whose range boundaries come from a SAMPLING job over the child —
-    the child plan executes twice, and Spark's stage reuse only
-    absorbs the part before the child's last shuffle, so everything
-    downstream of it (here: the expensive Arrow kernels and narrow
-    assembly tails) is paid twice.  A lazy ``localCheckpoint`` makes
-    the sample pass compute-and-persist the rows once and the shuffle
-    pass re-read them (measured: kg_relations_scored 5.09→2.11 s at
-    sf0.1).  Rows, values and output order are untouched — only the
-    physical plan changes; at 100 TB the materialization is the final
-    query OUTPUT (not an inflated intermediate), the same rows the
-    range exchange itself must buffer."""
-    return df.localCheckpoint(eager=False).orderBy(*cols)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,7 +205,7 @@ def q_kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     eq = pages_src.equivalences_df(spark, pages_src.doc_equivalences())
     dic = surface_dictionary(pages_src.entities_df(spark))
-    return _ck_sort(surface_components(eq, dic), "surface")
+    return sorted_output(surface_components(eq, dic), "surface")
 
 
 def sql_kg_components() -> str:
@@ -320,16 +304,15 @@ def q_mrc_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .broadcast import mrc_weights_broadcast
     from .operators.mrc import mrc_answers
 
-    zh = (
+    # materialized once: the examples frame built from this is
+    # consumed by THREE branches of the assembly (the candidate kernel
+    # input, the answer-text join, and the final left join) — without
+    # it the page render+extract chain executes 3×
+    zh = materialize(
         _extracted_pages(spark, sf_dir)
         .filter((F.col("lang") == "zh") & (F.length("text") > 0))
         .select("url", "text")
         .repartition(spark.sparkContext.defaultParallelism)
-        # materialized once (r06): the examples frame built from this
-        # is consumed by THREE branches of the assembly (the candidate
-        # kernel input, the answer-text join, and the final left join)
-        # — without it the page render+extract chain executes 3×
-        .localCheckpoint(eager=True)
     )
     return mrc_answers(zh, mrc_weights_broadcast(spark)).select(
         "url",
@@ -351,7 +334,7 @@ def q_kg_relations_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.nre import classify_relations_fused
 
     rm = _records_mentions(spark, sf_dir)
-    return _ck_sort(
+    return sorted_output(
         classify_relations_fused(rm, nre_weights_broadcast(spark)).withColumn(
             "score", F.round("score", 6)
         ),
@@ -392,7 +375,7 @@ def q_kg_relations_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
         rm, nre_weights_broadcast(spark)
     ).withColumn("score", F.round("score", 6))
     linked = link_mentions(explode_mentions(rm), pages_src.entities_df(spark))
-    return _ck_sort(
+    return sorted_output(
         bag_relations(scored, linked)
         .withColumn("bag_score", F.round("bag_score", 6))
         .withColumn("max_score", F.round("max_score", 6)),
@@ -1228,7 +1211,7 @@ FROM flat ORDER BY qas_id
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ck_sort(
+    return sorted_output(
         dedup.exact_duplicates(_docs_with_replicas(spark, sf_dir)),
         "content_hash",
     )
@@ -1259,7 +1242,7 @@ SELECT doc_id, shingle FROM (
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ck_sort(
+    return sorted_output(
         dedup.minhash_signatures(_docs(spark, sf_dir)).withColumn(
             "band", F.col("band").cast("long")
         ),
@@ -1312,7 +1295,7 @@ def q_dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket join is linear in cluster size; the ``max_bucket`` cap
     guards the remaining near-dup mega-buckets (r3 verdict item 1)."""
     reps, _members = dedup.collapse_exact(_docs_with_replicas(spark, sf_dir))
-    return _ck_sort(dedup.lsh_candidate_pairs(reps), "doc_a", "doc_b")
+    return sorted_output(dedup.lsh_candidate_pairs(reps), "doc_a", "doc_b")
 
 
 def sql_dedup_lsh_pairs() -> str:
@@ -1338,7 +1321,7 @@ def q_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_lsh_pairs, so the histogram instruments exactly the join the
     cap guards."""
     reps, _members = dedup.collapse_exact(_docs_with_replicas(spark, sf_dir))
-    return _ck_sort(
+    return sorted_output(
         dedup.lsh_bucket_stats(reps).withColumn(
             "band", F.col("band").cast("long")
         ),
@@ -1376,7 +1359,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sh = dedup.shingle_table(reps).persist(StorageLevel.MEMORY_AND_DISK)
     cands = dedup.lsh_candidate_pairs(reps, shingles=sh)
-    return _ck_sort(
+    return sorted_output(
         dedup.ngram_jaccard_pairs(reps, cands, threshold=0.5, shingles=sh)
         .withColumn("jaccard", F.round("jaccard", 6)),
         "doc_a",
@@ -1435,7 +1418,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     corpus = docs.filter(F.pmod(F.col("doc_id"), F.lit(DECONTAM_MOD)) != 0)
     bench = docs.filter(F.pmod(F.col("doc_id"), F.lit(DECONTAM_MOD)) == 0)
-    return _ck_sort(
+    return sorted_output(
         dedup.contamination_scores(corpus, bench).withColumn(
             "contamination", F.round("contamination", 6)
         ),
@@ -1482,7 +1465,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = docs.filter(F.pmod(F.col("doc_id"), F.lit(DECONTAM_MOD)) != 0)
     target = docs.filter(F.pmod(F.col("doc_id"), F.lit(DECONTAM_MOD)) == 0)
     w = selection.importance_weights(raw, target)
-    return _ck_sort(selection.select_top_k(w, DSIR_TOP_K), "doc_id")
+    return sorted_output(selection.select_top_k(w, DSIR_TOP_K), "doc_id")
 
 
 def sql_dsir_weights() -> str:
@@ -1563,7 +1546,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", (F.col("lang") == "en").cast("double").alias("y")
     )
     s = selection.quality_lr_scores(d, labels)
-    return _ck_sort(
+    return sorted_output(
         s.join(labels, "doc_id").select(
             "doc_id",
             F.col("y").cast("long").alias("label"),
@@ -1652,7 +1635,7 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     read dup_word_frac = 1.0 (every window shared with the replica);
     within-doc repetition alone scores 0 (distinct-doc frequency).
     Oracle: same positional grams / lag-gap merge in window SQL."""
-    return _ck_sort(
+    return sorted_output(
         dedup.dup_span_stats(_docs_with_replicas(spark, sf_dir)), "doc_id"
     )
 
@@ -1731,7 +1714,7 @@ def q_dedup_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy — linear.  Oracle: the shared span CTE chain + NOT EXISTS
     range anti-join."""
     s = dedup.remove_duplicated_spans(_docs_with_replicas(spark, sf_dir))
-    return _ck_sort(
+    return sorted_output(
         s.select(
             "doc_id",
             "total_words",
@@ -1836,7 +1819,7 @@ def q_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 of the cleaned text.  Narrow Catalyst array lambdas — zero
     shuffle beyond the output orderBy."""
     s = textstats.c4_line_stats(_paged_docs(spark, sf_dir))
-    return _ck_sort(
+    return sorted_output(
         s.select(
             "doc_id",
             "n_lines",
@@ -1945,7 +1928,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Patterns live in the RE2 ∩ java regex common dialect so the DuckDB
     oracle runs byte-identical expressions."""
     s = textstats.pii_stats(_pii_docs(spark, sf_dir))
-    return _ck_sort(
+    return sorted_output(
         s.select(
             "doc_id",
             "n_emails",
@@ -1978,7 +1961,7 @@ def q_domain_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc keep test is a deterministic md5 draw — no window, no
     per-source sort, skew-immune.  Oracle: identical integer-fed md5
     arithmetic."""
-    return _ck_sort(selection.domain_sample(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(selection.domain_sample(_docs(spark, sf_dir)), "doc_id")
 
 
 def sql_domain_sample() -> str:
@@ -2005,7 +1988,7 @@ def q_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset, and covered chunk range.  One shuffle on the uniform shard
     key; the per-shard window is the only ordered step.  Oracle: same
     window arithmetic in SQL."""
-    return _ck_sort(selection.pack_chunks(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(selection.pack_chunks(_docs(spark, sf_dir)), "doc_id")
 
 
 def sql_pack_chunks() -> str:
@@ -2080,7 +2063,7 @@ def q_host_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy — no pair enumeration; the threshold is integer
     arithmetic, oracle-exact."""
     s = dedup.host_boilerplate_stats(_hosted_docs(spark, sf_dir))
-    return _ck_sort(
+    return sorted_output(
         s.select(
             "doc_id",
             "source",
@@ -2145,7 +2128,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     head/middle/tail by EXACT terciles of the 4-dp score grid (the
     histogram window runs over the bounded grid, never the corpus)."""
     d = _docs(spark, sf_dir)
-    return _ck_sort(
+    return sorted_output(
         selection.nll_terciles(selection.bigram_lm_nll(d, d)),
         "doc_id"
     )
@@ -2247,7 +2230,7 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("www."), F.col("source"), F.lit(".example.com"))
         ).alias("host")
     )
-    return _ck_sort(urls.canonicalize_urls(pages, blocklist), "doc_id")
+    return sorted_output(urls.canonicalize_urls(pages, blocklist), "doc_id")
 
 
 _URL_PAGES_SQL = """(
@@ -2327,7 +2310,7 @@ def q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return _ck_sort(urls.snapshot_diff(a, b), "doc_id")
+    return sorted_output(urls.snapshot_diff(a, b), "doc_id")
 
 
 def sql_crawl_diff() -> str:
@@ -2422,7 +2405,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet from the independent python encoder."""
     from .operators import bpe
 
-    return _ck_sort(bpe.encode_token_counts(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(bpe.encode_token_counts(_docs(spark, sf_dir)), "doc_id")
 
 
 def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2430,7 +2413,7 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reproducible pseudorandom training order every epoch consumes
     — md5(seed:doc_id) order key, md5 shards, dense per-shard
     positions.  One uniform-key shuffle; per-shard window only."""
-    return _ck_sort(selection.shuffle_order(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(selection.shuffle_order(_docs(spark, sf_dir)), "doc_id")
 
 
 def sql_corpus_shuffle() -> str:
@@ -2452,7 +2435,7 @@ FROM keyed ORDER BY doc_id
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ck_sort(dedup.simhash(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(dedup.simhash(_docs(spark, sf_dir)), "doc_id")
 
 
 def sql_dedup_simhash() -> str:
@@ -2530,12 +2513,6 @@ def _dedup_keep_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    # r06: materialize the edge set BEFORE connected_components — its
-    # adaptive local-vs-distributed probe (limit+count) and the driver
-    # union-find's collect() otherwise each re-run the whole LSH
-    # candidate + Jaccard-verify DAG (measured ~1.5 s per extra run at
-    # sf0.1; the edge set itself is |members|+|near pairs|, tiny)
-    edges = edges.localCheckpoint(eager=True)
     comp = connected_components(edges)
     return (
         d.select("doc_id")
@@ -2560,7 +2537,7 @@ def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     A,C never pair directly.  Scale: the edge set is
     |members| + |near pairs| (≪ |docs|²), so the CC cost is linear in
     duplicate mass — never quadratic in a cluster's size."""
-    return _ck_sort(_dedup_keep_frame(spark, sf_dir), "doc_id")
+    return sorted_output(_dedup_keep_frame(spark, sf_dir), "doc_id")
 
 
 def _dedup_keep_ctes() -> str:
@@ -2653,7 +2630,7 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("n_words") < CLEAN_MIN_WORDS, "too_short")
         .when(F.col("quality") < CLEAN_QUALITY_MIN, "low_quality")
     )
-    return _ck_sort(
+    return sorted_output(
         verdict.withColumnRenamed("keep", "dedup_keep")
         .join(stats, "doc_id")
         .select(
@@ -2699,7 +2676,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     every band bucket), then the never-all-pairs band join with the
     ``max_bucket`` oversized-bucket guard."""
     reps, _members = dedup.collapse_exact(_docs_with_replicas(spark, sf_dir))
-    return _ck_sort(dedup.simhash_near_pairs(reps), "doc_a", "doc_b")
+    return sorted_output(dedup.simhash_near_pairs(reps), "doc_a", "doc_b")
 
 
 def sql_dedup_simhash_pairs() -> str:
@@ -2763,7 +2740,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them), so the cap can only bite genuine near-dup mega-buckets —
     # an identical-vector cluster bigger than the cap is NOT dropped;
     # the recall test asserts the planted pairs survive
-    return _ck_sort(
+    return sorted_output(
         dedup.embedding_near_dups_lsh(
             emb,
             threshold=0.9,
@@ -2835,7 +2812,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = media_from_documents(_docs(spark, sf_dir))
     feats = extract_features(media)
-    return _ck_sort(
+    return sorted_output(
         feats.select(
             "media_id",
             "kind",
@@ -2917,7 +2894,7 @@ def sql_multimodal_features() -> str:
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 10)
-    return _ck_sort(
+    return sorted_output(
         similarity.cosine_topk(emb, q, k=5)
         .withColumn("cosine", F.round("cosine", 6))
         .withColumn("rank", F.col("rank").cast("long")),
@@ -2974,7 +2951,7 @@ def _lsh_bucket_case(dim: int, n_bands: int, bits: int, seed: int = 42) -> str:
 def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 10)
-    return _ck_sort(
+    return sorted_output(
         similarity.lsh_topk(
             emb, q, k=5, n_bands=_LSH_BANDS, bits_per_band=_LSH_BITS, dim=64
         )
@@ -3037,7 +3014,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_from_documents(_docs(spark, sf_dir)), _RESIZE_W, _RESIZE_H
     )
     feats = extract_features(media)
-    return _ck_sort(
+    return sorted_output(
         feats.select(
             "media_id", "kind", "n_bytes", F.posexplode("feature").alias("dim", "value")
         ).select(
@@ -3069,7 +3046,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample — pytest covers recall with trained centroids)."""
     emb = _embeddings(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 10)
-    return _ck_sort(
+    return sorted_output(
         similarity.ivf_topk(
             emb, q, k=5, n_centroids=_IVF_K, nprobe=_IVF_NPROBE, dim=64
         )
@@ -3132,7 +3109,7 @@ FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ck_sort(textstats.text_stats(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(textstats.text_stats(_docs(spark, sf_dir)), "doc_id")
 
 
 def _text_stats_sql(src: str) -> str:
@@ -3180,7 +3157,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetitious-text filter of Gopher A1 / The Pile / Dolma.  One
     narrow Arrow-batched pass, zero shuffle; the oracle recomputes
     every signal with per-n unnest + groupBy CTEs."""
-    return _ck_sort(textstats.repetition_stats(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(textstats.repetition_stats(_docs(spark, sf_dir)), "doc_id")
 
 
 def sql_repetition_stats() -> str:
@@ -3263,7 +3240,7 @@ ORDER BY b.doc_id
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ck_sort(textstats.lang_id(_extracted_pages(spark, sf_dir)), "url")
+    return sorted_output(textstats.lang_id(_extracted_pages(spark, sf_dir)), "url")
 
 
 def sql_lang_id() -> str:
@@ -3282,7 +3259,7 @@ FROM m ORDER BY url
 
 
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ck_sort(textstats.token_counts(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(textstats.token_counts(_docs(spark, sf_dir)), "doc_id")
 
 
 def sql_token_counts() -> str:
@@ -3299,7 +3276,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint with the k+w−1 match guarantee; one Arrow-batched
     numpy kernel (see the operator for why Catalyst is quadratic
     here)."""
-    return _ck_sort(
+    return sorted_output(
         textstats.winnow_fingerprints(_docs(spark, sf_dir)),
         "doc_id",
         "fingerprint",
@@ -3349,7 +3326,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the capped LSH-candidate shape (fingerprints above the strict
     WINNOW_PAIR_CAP are common-vocabulary noise: dropped, never
     pair-enumerated)."""
-    return _ck_sort(
+    return sorted_output(
         textstats.winnow_overlap_pairs(_docs_with_replicas(spark, sf_dir)),
         "doc_a",
         "doc_b",
@@ -3378,7 +3355,7 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 words by tf·ln(N/df), idf 9-dp-quantized before the product
     (the dsir convention), ties broken (score desc, word asc).  The
     ranking window partitions by doc — bounded, skewless."""
-    return _ck_sort(
+    return sorted_output(
         textstats.tfidf_keywords(_docs(spark, sf_dir)), "doc_id", "rk"
     )
 
@@ -3416,7 +3393,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     word pairs by ln(c_pair·T/(c1·c2)) among pairs seen >= 5 times —
     two uniform-key count groupBys, a scalar-total broadcast, and a
     bounded TakeOrdered cut (no full sort)."""
-    return _ck_sort(
+    return sorted_output(
         textstats.pmi_bigrams(_docs(spark, sf_dir)), F.desc("pmi"), "w1", "w2"
     )
 
@@ -3454,7 +3431,7 @@ ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT {k}
 
 
 def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ck_sort(textstats.fingerprints(_docs(spark, sf_dir)), "doc_id")
+    return sorted_output(textstats.fingerprints(_docs(spark, sf_dir)), "doc_id")
 
 
 def sql_fingerprints() -> str:

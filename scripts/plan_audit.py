@@ -85,8 +85,8 @@ Counts from `executedPlan().toString()` at {sf} (regenerate with
 occurrence INCLUDING broadcast exchanges and dimension-table prep — the
 fact-path shuffle story per query is in the commentary.
 
-NOTE (r06): queries whose declared sort goes through `_ck_sort`
-(queries.py) now register as `Sort ← Exchange ← Scan ExistingRDD` — the
+NOTE (r06): queries whose declared sort goes through `sorted_output`
+(materialize.py) now register as `Sort ← Exchange ← Scan ExistingRDD` — the
 pre-sort DAG is materialized by a localCheckpoint so the range
 exchange's sampling pass cannot re-execute it, and is therefore
 invisible to this audit.  The full upstream plans are committed under

@@ -67,9 +67,9 @@ def test_bpe_encode_planted(spark):
     assert got == {1: (2, 2), 2: (1, 3)}
 
 
-def test_bpe_driver_path_matches_distributed(spark):
+def test_bpe_driver_path_matches_distributed(spark, monkeypatch):
     """r06: the driver-side merge loop (vocab under DRIVER_VOCAB_ROWS)
-    and the distributed per-round loop (forced via driver_vocab_rows=0)
+    and the distributed per-round loop (forced by setting it to 0)
     must learn the identical merge sequence."""
     from knowledgeextraction_spark.operators import bpe
 
@@ -80,7 +80,8 @@ def test_bpe_driver_path_matches_distributed(spark):
         "doc_id long, text string",
     )
     fast = bpe.train_bpe(docs, n_merges=12)
-    dist = bpe.train_bpe(docs, n_merges=12, driver_vocab_rows=0)
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_ROWS", 0)
+    dist = bpe.train_bpe(docs, n_merges=12)
     assert fast == dist
 
 

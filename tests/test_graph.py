@@ -105,45 +105,61 @@ def test_pagerank_dangling_redistribution(spark):
     assert leak_total < 5.0 - 0.01
 
 
-def test_pagerank_driver_path_matches_distributed(spark):
+def _driver_and_distributed(monkeypatch, run):
+    """``run()`` on the driver path, then with the distributed loop
+    forced (``DRIVER_MAX_EDGES`` = 0)."""
+    from knowledgeextraction_spark import materialize
+
+    fast = run()
+    with monkeypatch.context() as m:
+        m.setattr(materialize, "DRIVER_MAX_EDGES", 0)
+        dist = run()
+    return fast, dist
+
+
+def test_pagerank_driver_path_matches_distributed(spark, monkeypatch):
     """r06: the adaptive driver loop (edge count under
-    PR_DRIVER_THRESHOLD) must equal the distributed rounds (forced via
-    driver_threshold=0) bit-for-bit, both variants."""
+    DRIVER_MAX_EDGES) must equal the distributed rounds bit-for-bit,
+    both variants."""
     from knowledgeextraction_spark.operators import graph
 
     edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (5, 0), (6, 2), (4, 6)]
     df = spark.createDataFrame(edges, "src long, dst long")
     for dangling in (False, True):
-        fast = {
-            r["id"]: r["rank"]
-            for r in graph.pagerank(
-                df, redistribute_dangling=dangling
-            ).collect()
-        }
-        dist = {
-            r["id"]: r["rank"]
-            for r in graph.pagerank(
-                df, redistribute_dangling=dangling, driver_threshold=0
-            ).collect()
-        }
+        fast, dist = _driver_and_distributed(
+            monkeypatch,
+            lambda: {
+                r["id"]: r["rank"]
+                for r in graph.pagerank(
+                    df, redistribute_dangling=dangling
+                ).collect()
+            },
+        )
         assert fast == dist
 
 
-def test_kcore_validates_parameters(spark):
-    """r5 ADVICE: k/max_rounds below 1 must raise, not silently return
-    everything in-core."""
+def test_graph_operators_validate_parameters(spark):
+    """Parameters that would silently return a wrong answer must raise:
+    kcore with k/max_rounds below 1 (everything in-core), k-hop reach
+    with k below 1 (1-hop reach), and KMV with kmv_k below 2 (every
+    full sketch estimates 0)."""
     import pytest
 
     from knowledgeextraction_spark.operators import graph
 
     df = spark.createDataFrame([(0, 1)], "src long, dst long")
-    with pytest.raises(ValueError):
-        graph.kcore_members(df, k=0)
-    with pytest.raises(ValueError):
-        graph.kcore_members(df, max_rounds=0)
+    for fn, kwargs in [
+        (graph.kcore_members, {"k": 0}),
+        (graph.kcore_members, {"max_rounds": 0}),
+        (graph.khop_counts, {"k": 0}),
+        (graph.kmv_reach_counts, {"k": 0}),
+        (graph.kmv_reach_counts, {"kmv_k": 1}),
+    ]:
+        with pytest.raises(ValueError):
+            fn(df, **kwargs)
 
 
-def test_graph_driver_paths_match_distributed(spark):
+def test_graph_driver_paths_match_distributed(spark, monkeypatch):
     """r06: kcore / khop-KMV / triangles driver twins must equal the
     distributed loops bit-for-bit (integer/string semantics — exact,
     no quantization tolerance needed)."""
@@ -160,8 +176,9 @@ def test_graph_driver_paths_match_distributed(spark):
         (graph.kmv_reach_counts, {"k": 2, "kmv_k": 3}),  # estimate branch
         (graph.triangle_count, {}),
     ]:
-        fast = {tuple(r) for r in fn(df, **kwargs).collect()}
-        dist = {tuple(r) for r in fn(df, driver_threshold=0, **kwargs).collect()}
+        fast, dist = _driver_and_distributed(
+            monkeypatch, lambda: {tuple(r) for r in fn(df, **kwargs).collect()}
+        )
         assert fast == dist, (fn.__name__, kwargs)
 
 
@@ -179,36 +196,6 @@ def test_pagerank_invariant_to_partitioning(spark):
     r1 = {r["id"]: r["rank"] for r in graph.pagerank(df1).collect()}
     r8 = {r["id"]: r["rank"] for r in graph.pagerank(df8).collect()}
     assert r1 == r8  # bit-exact, not approx
-
-
-def test_pagerank_checkpoint_every_is_value_invariant(spark):
-    """checkpoint_every only changes WHERE materialization barriers
-    fall, never values: the per-round quantization lives in the plan.
-    Bit-exact across 1 (default), 3 (uneven — last round forced), and
-    the full-variant combination."""
-    import random
-
-    rng = random.Random(29)
-    edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(200)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    base = {r["id"]: r["rank"] for r in graph.pagerank(df).collect()}
-    e3 = {
-        r["id"]: r["rank"]
-        for r in graph.pagerank(df, checkpoint_every=3).collect()
-    }
-    assert base == e3  # bit-exact
-    full1 = {
-        r["id"]: r["rank"]
-        for r in graph.pagerank(df, redistribute_dangling=True).collect()
-    }
-    full3 = {
-        r["id"]: r["rank"]
-        for r in graph.pagerank(
-            df, redistribute_dangling=True, checkpoint_every=3
-        ).collect()
-    }
-    assert full1 == full3  # bit-exact
 
 
 def test_kcore_known_graphs(spark):
@@ -362,9 +349,8 @@ def test_kmv_reach_exact_below_capacity(spark):
     assert kmv == exact
 
 
-def test_kmv_reach_k3_and_lazy_flag(spark):
-    """Multi-hop merge loop (k=3) matches the exact BFS below capacity,
-    and use_local_checkpoint=False (pure lazy plan) is value-identical."""
+def test_kmv_reach_k3(spark):
+    """Multi-hop merge loop (k=3) matches the exact BFS below capacity."""
     edges = _random_edges(30, 70, seed=11)
     df = spark.createDataFrame(edges, "src long, dst long")
     exact = {r["id"]: r["reach"] for r in graph.khop_counts(df, k=3).collect()}
@@ -373,13 +359,6 @@ def test_kmv_reach_k3_and_lazy_flag(spark):
         for r in graph.kmv_reach_counts(df, k=3, kmv_k=64).collect()
     }
     assert kmv == exact
-    lazy = {
-        r["id"]: r["reach"]
-        for r in graph.kmv_reach_counts(
-            df, k=3, kmv_k=64, use_local_checkpoint=False
-        ).collect()
-    }
-    assert lazy == exact
 
 
 def test_kmv_reach_estimate_error_bound(spark):

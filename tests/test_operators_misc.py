@@ -187,26 +187,6 @@ def test_lsh_finds_identical_docs(spark):
     assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in verified] == [(1, 2, 1.0)]
 
 
-def test_pair_builders_lazy_flag_parity(spark):
-    """use_local_checkpoint=False (ADVICE r4): the pair builders stay
-    pure lazy plan builders — no job at call time — and produce the
-    same pairs as the default eager-materialized path."""
-    from knowledgeextraction_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        simhash_near_pairs,
-    )
-
-    text = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = spark.createDataFrame(
-        [(1, text), (2, text), (3, "totally different words here now ok yes")],
-        "doc_id long, text string",
-    )
-    for fn in (lsh_candidate_pairs, simhash_near_pairs):
-        eager = {tuple(r[:2]) for r in fn(docs).collect()}
-        lazy = {tuple(r[:2]) for r in fn(docs, use_local_checkpoint=False).collect()}
-        assert eager == lazy and (1, 2) in eager, fn.__name__
-
-
 def test_simhash_close_for_similar_docs(spark):
     from knowledgeextraction_spark.operators.dedup import simhash
 
@@ -1262,6 +1242,11 @@ def test_quality_lr_separates_planted(spark):
         "doc_id", (SF.col("doc_id") < 100).cast("double").alias("y")
     )
     assert selection.quality_lr_scores(with_empty, labels2).count() == 17
+
+    # a diverged (non-finite) weight raises instead of NULL-ing every
+    # score through an unparseable from_json literal
+    with pytest.raises(ValueError, match="bucket"):
+        selection.quality_lr_scores(docs, labels, n_iter=1, lr=float("inf"))
 
 
 def test_round_half_up_matches_spark_round(spark):

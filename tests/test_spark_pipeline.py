@@ -247,7 +247,7 @@ def test_digit_alias_narrow_oracle_parity(spark, corpus):
     assert len(linked) == 2
 
 
-def test_distributed_components_match_driver_path(spark, corpus):
+def test_distributed_components_match_driver_path(spark, corpus, monkeypatch):
     """The iterative min-label-propagation CC (the 100-TB path) and the
     driver union-find fast path produce identical components."""
     from knowledgeextraction_spark.operators.canonicalize import connected_components
@@ -270,11 +270,13 @@ def test_distributed_components_match_driver_path(spark, corpus):
         )
         .select("src", "dst")
     )
-    dist = {
-        (r["id"], r["component"])
-        for r in connected_components(e, driver_threshold=0).collect()
-    }
+    from knowledgeextraction_spark import materialize
+
     local = {
+        (r["id"], r["component"]) for r in connected_components(e).collect()
+    }
+    monkeypatch.setattr(materialize, "DRIVER_MAX_EDGES", 0)
+    dist = {
         (r["id"], r["component"]) for r in connected_components(e).collect()
     }
     assert dist == local and len(dist) > 0
