@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import driver_rows, materialize
+from ..materialize import driver_rows, local_frame, materialize
 from .dedup import normalized_text
 
 N_MERGES = 20
@@ -193,8 +193,8 @@ def merge_table(
     docs: DataFrame, n_merges: int = N_MERGES
 ) -> DataFrame:
     """the merge sequence as a DataFrame (rank, left, right, freq)."""
-    spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         train_bpe(docs, n_merges),
         "rank long, left string, right string, freq long",
     )

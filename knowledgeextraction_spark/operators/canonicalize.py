@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 # DRIVER_MAX_EDGES is read as mz.DRIVER_MAX_EDGES at call time, so a
 # test can patch it to force the distributed loop
 from .. import materialize as mz
-from ..materialize import driver_rows, materialize
+from ..materialize import driver_rows, local_frame, materialize
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -80,8 +80,8 @@ def connected_components(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     edges = materialize(edges.select("src", "dst"))
     rows = driver_rows(edges, mz.DRIVER_MAX_EDGES)
     if rows is not None:
-        return edges.sparkSession.createDataFrame(
-            _driver_components(rows), "id long, component long"
+        return local_frame(
+            edges.sparkSession, _driver_components(rows), "id long, component long"
         )
 
     adj = materialize(_symmetrize(edges))

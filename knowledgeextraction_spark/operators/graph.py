@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 # DRIVER_MAX_EDGES is read as mz.DRIVER_MAX_EDGES at call time, so a
 # test can patch it to force the distributed loop
 from .. import materialize as mz
-from ..materialize import driver_rows, materialize
+from ..materialize import driver_rows, local_frame, materialize
 
 PR_DAMPING = 0.85
 PR_ITERS = 10
@@ -178,7 +178,8 @@ def pagerank(
     edges = materialize(edges.select("src", "dst"))
     rows = driver_rows(edges, mz.DRIVER_MAX_EDGES)
     if rows is not None:
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             _driver_pagerank(rows, damping, n_iter, round_dp, redistribute_dangling),
             "id long, rank double",
         )
@@ -398,8 +399,8 @@ def kmv_reach_counts(
     edges = materialize(edges.select("src", "dst"))
     rows = driver_rows(edges, mz.DRIVER_MAX_EDGES)
     if rows is not None:
-        return edges.sparkSession.createDataFrame(
-            _driver_kmv_reach(rows, k, kmv_k), "id long, reach long"
+        return local_frame(
+            edges.sparkSession, _driver_kmv_reach(rows, k, kmv_k), "id long, reach long"
         )
     nodes = _edge_nodes(edges)
     hashes = nodes.select("id", F.md5(F.col("id").cast("string")).alias("hv"))
@@ -511,8 +512,8 @@ def kcore_members(
     raw = materialize(edges.select("src", "dst"))
     rows = driver_rows(raw, mz.DRIVER_MAX_EDGES)
     if rows is not None:
-        return raw.sparkSession.createDataFrame(
-            _driver_kcore(rows, k, max_rounds), "id long, in_core boolean"
+        return local_frame(
+            raw.sparkSession, _driver_kcore(rows, k, max_rounds), "id long, in_core boolean"
         )
     und = materialize(
         raw.unionByName(
@@ -593,8 +594,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     raw = materialize(edges.select("src", "dst"))
     rows = driver_rows(raw, mz.DRIVER_MAX_EDGES)
     if rows is not None:
-        return raw.sparkSession.createDataFrame(
-            _driver_triangles(rows), "id long, triangles long"
+        return local_frame(
+            raw.sparkSession, _driver_triangles(rows), "id long, triangles long"
         )
     und = materialize(
         raw.unionByName(

@@ -91,13 +91,18 @@ def link_mentions(
     entities: DataFrame,
     salted: bool = False,
     n_salt: int = 8,
+    dictionary: DataFrame | None = None,
 ) -> DataFrame:
     """mentions + dictionary → linked mentions (adds entity_id).
 
     Inner join: unlinked mentions are dropped (NIL linking is a filter,
     not a null column, for the triple path). Label types must agree.
+    ``dictionary``: an optional prebuilt (surface, label_type,
+    entity_id) frame, as in ``triples.emit_triples_narrow``.
     """
-    dic = surface_dictionary(entities).withColumnRenamed("label_type", "dict_label")
+    if dictionary is None:
+        dictionary = surface_dictionary(entities)
+    dic = dictionary.withColumnRenamed("label_type", "dict_label")
     m = mentions.withColumn("norm_surface", normalize_surface(F.col("surface")))
 
     if not salted:

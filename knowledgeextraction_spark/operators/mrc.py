@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..core.mrc import MAX_ANSWER_LENGTH, N_BEST_SIZE, QUESTIONS
+from ..materialize import local_frame
 
 CANDIDATE_SCHEMA = (
     "url string, label_type string, span_index int, start_orig int, "
@@ -57,8 +58,8 @@ def py_strip(col) -> F.Column:
 def mrc_examples(pages_text: DataFrame) -> DataFrame:
     """(url, text) → (url, label_type, context): one MRC example per
     (page, entity type) — NER-as-MRC, mrc_processor.py:25-52."""
-    types = pages_text.sparkSession.createDataFrame(
-        [(t,) for t in QUESTIONS], "label_type string"
+    types = local_frame(
+        pages_text.sparkSession, [(t,) for t in QUESTIONS], "label_type string"
     )
     return pages_text.crossJoin(F.broadcast(types)).select(
         "url", "label_type", F.col("text").alias("context")

@@ -15,11 +15,19 @@ query, ARCHITECTURE.md §1):
 ``linked`` is an output table; the triples stage links inside its own
 broadcast joins and reads only the ``records`` snapshot.
 
+Dimension tables: the surface dictionary and the entity component map
+are resolved once per pipeline, on the driver (the ``link`` and
+``canonicalize`` driver twins), and joined as local relations; an
+entity or equivalence table over ``materialize.DRIVER_MAX_EDGES`` rows
+takes the distributed operators instead.
+
 Resumability [NORTH]: each materialized stage writes parquet (stands in
 for an Iceberg snapshot) and is skipped when its output already exists
 — mirroring the reference's compute-if-absent TFRecord cache
-(run_crf_albert.py:153-157). Per-stage lineage rows (stage, partition
-counts, row counts, wall ms) append to a ``_lineage`` table (A11).
+(run_crf_albert.py:153-157). Each computed stage appends lineage rows
+to a ``_lineage`` table (A11): one row per written part file (its
+index in sorted file order, its row count from the parquet footer)
+with the stage name, wall ms and a timestamp, written by the driver.
 
 Partitioning [NORTH]: the triples sink is written partitioned by
 ``predicate`` (low cardinality — one dir per relation) and bucketed by
@@ -31,14 +39,20 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.canonicalize import entity_component_map
+# DRIVER_MAX_EDGES is read as mz.DRIVER_MAX_EDGES at call time, so a
+# test can patch it to force the distributed dimension operators
+from . import materialize as mz
+from .materialize import driver_rows, local_frame
+from .operators.canonicalize import entity_component_map, entity_component_map_rows
 from .operators.detect import detect_records_from_pages, explode_mentions
-from .operators.link import link_mentions, surface_dictionary
+from .operators.link import link_mentions, surface_dictionary, surface_dictionary_rows
 from .operators.triples import emit_triples_narrow
 
 
@@ -51,15 +65,51 @@ class PipelineResult:
     stage_times: dict[str, float] = field(default_factory=dict)
 
 
-def _lineage_rows(spark: SparkSession, out_dir: str, stage: str, df: DataFrame, wall_ms: float) -> None:
-    counts = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .withColumn("stage", F.lit(stage))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("ts", F.current_timestamp())
+def _append_lineage(out_dir: str, stage: str, files: list[str], wall_ms: float) -> None:
+    """Append one ``_lineage`` row per written snapshot file — (partition_id
+    int, count long, stage string, wall_ms double, ts timestamp) — with
+    no Spark job: row counts come from the parquet footers, and the
+    rows land as one parquet file written from the driver.
+
+    ``files`` are the snapshot's file URIs (``inputFiles()``), all
+    directly under ``out_dir/stage``; ``partition_id`` is a file's
+    index in sorted order.  The lineage file is written under a
+    dot-prefixed name (which Spark's reader skips) and then moved into
+    place, so a crash never leaves a half-written file in the table.
+    ``out_dir`` must be a path or URI pyarrow can open; anything else
+    raises — lineage is never skipped silently."""
+    from urllib.parse import unquote
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    if "://" not in out_dir:
+        out_dir = os.path.abspath(out_dir)
+    fs, base = pafs.FileSystem.from_uri(out_dir)
+    counts = [
+        pq.read_metadata(
+            f"{base}/{stage}/{unquote(f.rsplit('/', 1)[1])}", filesystem=fs
+        ).num_rows
+        for f in sorted(files)
+    ]
+    n = len(counts)
+    table = pa.table(
+        {
+            "partition_id": pa.array(range(n), pa.int32()),
+            "count": pa.array(counts, pa.int64()),
+            "stage": pa.array([stage] * n, pa.string()),
+            "wall_ms": pa.array([wall_ms] * n, pa.float64()),
+            "ts": pa.array(
+                [datetime.now(timezone.utc)] * n, pa.timestamp("us", tz="UTC")
+            ),
+        }
     )
-    counts.write.mode("append").parquet(os.path.join(out_dir, "_lineage"))
+    lineage = f"{base}/_lineage"
+    name = f"part-{stage}-{uuid.uuid4().hex}.parquet"
+    fs.create_dir(lineage, recursive=True)
+    pq.write_table(table, f"{lineage}/.{name}", filesystem=fs)
+    fs.move(f"{lineage}/.{name}", f"{lineage}/{name}")
 
 
 class KGPipeline:
@@ -87,7 +137,7 @@ class KGPipeline:
         self.lang = lang
         self.out_dir = out_dir
         self._weights_bc = None
-        self._component_map = None
+        self._dims = None
 
     @property
     def weights_bc(self):
@@ -114,19 +164,55 @@ class KGPipeline:
     def mentions(self, records: DataFrame) -> DataFrame:
         return explode_mentions(records)
 
+    def _dimensions(self) -> tuple[DataFrame, DataFrame]:
+        """(surface dictionary, entity component map), resolved once.
+
+        Entity and equivalence tables of at most ``DRIVER_MAX_EDGES``
+        rows are pulled to the driver and resolved by the operators'
+        driver twins into local relations; the dictionary's surfaces
+        are the equivalence graph's nodes, so the one limit bounds
+        both.  Larger tables take the distributed operators."""
+        if self._dims is None:
+            limit = mz.DRIVER_MAX_EDGES
+            entities = driver_rows(
+                self.entities.select("entity_id", "canonical_name", "aliases", "label_type"),
+                limit,
+            )
+            equivalences = driver_rows(
+                self.equivalences.select("surface_a", "surface_b"), limit
+            )
+            if entities is None or equivalences is None:
+                dictionary = surface_dictionary(self.entities)
+                cmap = entity_component_map(self.equivalences, dictionary)
+            else:
+                dictionary = local_frame(
+                    self.spark,
+                    surface_dictionary_rows(entities),
+                    "surface string, label_type string, entity_id long",
+                )
+                cmap = local_frame(
+                    self.spark,
+                    entity_component_map_rows(equivalences, entities),
+                    "entity_id long, canonical_id long",
+                )
+            self._dims = (dictionary, cmap)
+        return self._dims
+
     def linked(self, mentions: DataFrame) -> DataFrame:
-        return link_mentions(mentions, self.entities)
+        return link_mentions(
+            mentions, self.entities, dictionary=self._dimensions()[0]
+        )
 
     def component_map(self) -> DataFrame:
-        if self._component_map is None:
-            self._component_map = entity_component_map(
-                self.equivalences, surface_dictionary(self.entities)
-            )
-        return self._component_map
+        return self._dimensions()[1]
 
     def triples(self, records: DataFrame) -> DataFrame:
         return emit_triples_narrow(
-            records, self.rules, self.entities, self.component_map()
+            records,
+            self.rules,
+            self.entities,
+            self.component_map(),
+            dictionary=self._dimensions()[0],
         )
 
     # --- orchestration --------------------------------------------------
@@ -142,7 +228,10 @@ class KGPipeline:
             df.write.mode("overwrite").parquet(path)
             wall_ms = (time.monotonic() - t0) * 1000
             times[name] = wall_ms
-            _lineage_rows(self.spark, self.out_dir, name, self.spark.read.parquet(path), wall_ms)
+            # the schema just written: no schema-inference job
+            snapshot = self.spark.read.schema(df.schema).parquet(path)
+            _append_lineage(self.out_dir, name, snapshot.inputFiles(), wall_ms)
+            return snapshot
         return self.spark.read.parquet(path)
 
     def run(self, pages: DataFrame) -> PipelineResult:

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .broadcast import weights_broadcast
-from .materialize import materialize, sorted_output
+from .materialize import local_frame, materialize, sorted_output
 from .operators import dedup, selection, similarity, textstats
 from .operators.conlleval import conll_eval
 from .operators.segment import packed_records, sentence_table
@@ -263,36 +263,18 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Uses the fused narrow plan (ARCHITECTURE.md §1): scan → one fused
     detect mapInPandas → in-array pairing → broadcast joins → distinct —
-    the same plan KGPipeline runs, whose parity with the numpy oracle
-    is asserted in tests/test_spark_pipeline.py."""
-    from .operators.canonicalize import entity_component_map_rows
-    from .operators.triples import emit_triples_narrow
+    KGPipeline's own triples stage, with its driver-resolved dimension
+    tables; its parity with the numpy oracle is asserted in
+    tests/test_spark_pipeline.py."""
+    from .pipeline import KGPipeline
 
-    rm = _records_mentions(spark, sf_dir)
-    # dimension prep on the driver (r06): the seed dictionary exists as
-    # python lists, and the distributed cmap operator cost ~2 s of
-    # tiny-shuffle scheduling PER TRIAL inside every consumer of this
-    # pipeline (kg_triples + the four graph queries) — the python twin
-    # is semantics-identical (pytest parity gate) and job-free
-    cmap = spark.createDataFrame(
-        entity_component_map_rows(
-            pages_src.doc_equivalences(), pages_src.dictionary()[0]
-        ),
-        "entity_id long, canonical_id long",
+    pipe = KGPipeline(
+        spark,
+        entities=pages_src.entities_df(spark),
+        rules=pages_src.rules_df(spark),
+        equivalences=pages_src.equivalences_df(spark, pages_src.doc_equivalences()),
     )
-    from .operators.link import surface_dictionary_rows
-
-    dic = spark.createDataFrame(
-        surface_dictionary_rows(pages_src.dictionary()[0]),
-        "surface string, label_type string, entity_id long",
-    )
-    return emit_triples_narrow(
-        rm,
-        pages_src.rules_df(spark),
-        pages_src.entities_df(spark),
-        cmap,
-        dictionary=dic,
-    )
+    return pipe.triples(_records_mentions(spark, sf_dir))
 
 
 def q_mrc_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,7 +1084,7 @@ def q_crf_fit_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_all.unpersist()
     rows = [(f"freq_{lab}", float(freq[i])) for i, lab in enumerate(LABELS)]
     rows += [("best_l2", float(best_l2)), ("dev_masked_accuracy", round(float(best_acc), 6))]
-    return spark.createDataFrame(rows, "metric string, value double").orderBy("metric")
+    return local_frame(spark, rows, "metric string, value double").orderBy("metric")
 
 
 def q_dirty_json(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3482,7 +3464,7 @@ def sql_length_histogram() -> str:
 def q_distinct_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3/U1: distinct label set ∪ {'O'}, sorted (gatherLabels)."""
     ev = _events(spark, sf_dir).select(F.col("event_type").alias("label")).distinct()
-    o = spark.createDataFrame([("O",)], "label string")
+    o = local_frame(spark, [("O",)], "label string")
     return ev.unionByName(o).distinct().orderBy("label")
 
 
@@ -3638,7 +3620,8 @@ def sql_masked_accuracy() -> str:
 
 def q_label_map_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: label remap via broadcast dimension join (taggerMapping)."""
-    mapping = spark.createDataFrame(
+    mapping = local_frame(
+        spark,
         [
             ("click", "interaction"),
             ("view", "impression"),

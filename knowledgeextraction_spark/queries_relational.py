@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .materialize import local_frame
+
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -215,7 +217,8 @@ def q_coalesce_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7 (GloVe init join, chinese_CONLL.py:177-188): left join on the
     exact key, fall back to a normalized-key join, coalesce."""
     ev = _events(spark, sf_dir)
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("click", 10.0), ("VIEW", 20.0), ("purchase", 30.0)],
         "key string, weight double",
     )

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .materialize import local_frame
+
 
 def conll_eval_lines(sentences: DataFrame) -> DataFrame:
     """sentences(sent_id, words array<string>, gold array<string>,
@@ -109,8 +111,10 @@ def write_predictions_tsv(
         F.col("guid").alias("k1"),
         F.concat_ws("\t", "guid", F.col("prediction").cast("string")).alias("value"),
     )
-    header = predictions.sparkSession.createDataFrame(
-        [(0, "", "index\tprediction")], "k0 int, k1 string, value string"
+    header = local_frame(
+        predictions.sparkSession,
+        [(0, "", "index\tprediction")],
+        "k0 int, k1 string, value string",
     )
     # explicit sort keys — union partition order is not a contract
     (

@@ -14,7 +14,8 @@ Two constructors:
 
 In production this table is an Iceberg scan
 (``spark.read.table("pages")``); here it's parquet/createDataFrame with
-the same schema.
+the same schema.  The dimension tables (entities, rules, equivalences)
+are driver-built ``materialize.local_frame``s.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.labels import ENTITY_TYPES
+from ..materialize import local_frame
 from ..fixtures.generator import (
     _CONNECTIVE_POOL,
     _FILLER_POOL,
@@ -209,20 +211,21 @@ def entities_df(spark: SparkSession, entities: list[Entity] | None = None) -> Da
         (e.entity_id, e.canonical_name, e.aliases, e.label_type, e.embedding, e.is_head)
         for e in entities
     ]
-    return spark.createDataFrame(rows, ENTITIES_SCHEMA)
+    return local_frame(spark, rows, ENTITIES_SCHEMA)
 
 
 def rules_df(spark: SparkSession, rules: list[Rule] | None = None) -> DataFrame:
     if rules is None:
         rules = doc_rules()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r.subj_label, r.obj_label, r.pattern, r.predicate) for r in rules],
         "subj_label string, obj_label string, pattern string, predicate string",
     )
 
 
 def equivalences_df(spark: SparkSession, equivalences: list[tuple[str, str]]) -> DataFrame:
-    return spark.createDataFrame(equivalences, "surface_a string, surface_b string")
+    return local_frame(spark, equivalences, "surface_a string, surface_b string")
 
 
 def doc_equivalences() -> list[tuple[str, str]]:
@@ -242,4 +245,6 @@ def fixture_pages(spark: SparkSession, corpus: Corpus | None = None, n_pages: in
     if corpus is None:
         corpus = generate_corpus(n_pages=n_pages, seed=seed)
     rows = [(p.url, p.warc_ts, p.html, p.text, p.lang) for p in corpus.pages]
+    # a fact-table fixture, not a local_frame: the list path and the
+    # Arrow path convert naive ``warc_ts`` datetimes differently
     return spark.createDataFrame(rows, PAGES_SCHEMA)

@@ -62,11 +62,12 @@ def incremental_triples(
     """Start (and return) a streaming query appending triples for every
     new pages parquet file under ``pages_dir``.
 
-    Dimension tables are resolved once at start (they are slowly
-    changing; restart the query to pick up a new dictionary snapshot).
+    Dimension tables are resolved once at start, on the driver (they
+    are slowly changing; restart the query to pick up a new dictionary
+    snapshot).
     """
-    pipe = KGPipeline(spark, entities.cache(), rules.cache(), equivalences, lang=lang)
-    pipe.component_map().cache().count()  # memoized: every batch reuses it
+    pipe = KGPipeline(spark, entities, rules, equivalences, lang=lang)
+    pipe.component_map()  # memoized: every batch reuses the resolved tables
 
     triples_path = os.path.join(out_dir, "triples")
     checkpoint = os.path.join(out_dir, "_checkpoint")

@@ -6,7 +6,7 @@ The north-star deployment shape:
     zip -r sparkkg.zip knowledgeextraction_spark
     spark-submit --master <cluster> --py-files sparkkg.zip \
         scripts/run_pipeline.py \
-        --sf-dir /data/sf0.1 --out /data/kg_out [--resume]
+        --sf-dir /data/sf0.1 --out /data/kg_out
 
 On a cluster the session comes from spark-submit's conf (master,
 executors, memory); this script only adds the engine's SQL-level
@@ -14,7 +14,9 @@ settings (AQE, Arrow batching) on top of whatever the submitter
 provided.  Input is the documents-derived pages table (sources.pages);
 swap `pages_from_documents` for `spark.read.table("pages")` against a
 real Iceberg catalog.  Every stage snapshot lands under --out with
-per-partition _lineage rows; --resume skips completed stages.
+one _lineage row per written part file (row counts from the parquet
+footers, written by the driver); a rerun with the same --out skips
+completed stages.
 """
 
 from __future__ import annotations

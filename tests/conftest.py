@@ -25,3 +25,24 @@ def corpus():
     from knowledgeextraction_spark.fixtures.generator import generate_corpus
 
     return generate_corpus(n_pages=60, seed=42)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (the number of Spark jobs ``fn()`` ran, its
+    result), counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run

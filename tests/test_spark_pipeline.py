@@ -6,6 +6,7 @@ per-row code, so we assert exact equality (P/R = 1.0) on every stage.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from knowledgeextraction_spark.core.packing import pack_sentences
 from knowledgeextraction_spark.core.textops import extract_text
@@ -19,15 +20,20 @@ from knowledgeextraction_spark.sources.pages import (
 )
 
 
-@pytest.fixture(scope="module")
-def pipeline_result(spark, corpus):
-    pages = fixture_pages(spark, corpus)
-    pipe = KGPipeline(
+def _pipeline(spark, corpus, **kw):
+    return KGPipeline(
         spark,
         entities=entities_df(spark, corpus.entities),
         rules=rules_df(spark, corpus.rules),
         equivalences=equivalences_df(spark, corpus.equivalences),
+        **kw,
     )
+
+
+@pytest.fixture(scope="module")
+def pipeline_result(spark, corpus):
+    pages = fixture_pages(spark, corpus)
+    pipe = _pipeline(spark, corpus)
     return pipe.run(pages), pipe
 
 
@@ -38,8 +44,6 @@ def oracle_result(corpus):
 
 def test_extract_byte_identical(spark, corpus):
     """[NORTH] per-row invariant: extracted text byte-identical per url."""
-    from pyspark.sql import functions as F
-
     from knowledgeextraction_spark.operators.extract import extracted_text
 
     pages = fixture_pages(spark, corpus)
@@ -141,27 +145,65 @@ def test_resume_skips_completed_stages(spark, corpus, tmp_path):
     pages = fixture_pages(spark, corpus)
     out = str(tmp_path / "kg")
 
-    def build():
-        return KGPipeline(
-            spark,
-            entities=entities_df(spark, corpus.entities),
-            rules=rules_df(spark, corpus.rules),
-            equivalences=equivalences_df(spark, corpus.equivalences),
-            out_dir=out,
-        )
-
-    r1 = build().run(pages)
+    r1 = _pipeline(spark, corpus, out_dir=out).run(pages)
     t1 = {tuple(r) for r in r1.triples.collect()}
     assert r1.stage_times  # first run actually computed stages
+    n_lineage = spark.read.parquet(f"{out}/_lineage").count()
 
-    r2 = build().run(pages)
+    r2 = _pipeline(spark, corpus, out_dir=out).run(pages)
     t2 = {tuple(r) for r in r2.triples.collect()}
     assert r2.stage_times == {}  # nothing recomputed
     assert t1 == t2
 
     lineage = spark.read.parquet(f"{out}/_lineage")
+    assert lineage.count() == n_lineage  # the resumed run appended nothing
     stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
     assert stages == {"records", "mentions", "linked", "triples"}
+    for stage in stages:
+        # one row per written part file, indexed in sorted file order,
+        # counts summing to the snapshot's rows
+        n_parts = len(list((tmp_path / "kg" / stage).glob("part-*")))
+        rows = lineage.filter(F.col("stage") == stage).collect()
+        assert sorted(r["partition_id"] for r in rows) == list(range(n_parts))
+        assert sum(r["count"] for r in rows) == spark.read.parquet(
+            f"{out}/{stage}"
+        ).count()
+
+
+def test_distributed_dimensions_match_driver_path(
+    spark, corpus, pipeline_result, monkeypatch
+):
+    """Entity or equivalence tables over DRIVER_MAX_EDGES take the
+    distributed surface_dictionary and entity_component_map: the linked
+    and triples outputs equal the driver-resolved path's."""
+    from knowledgeextraction_spark import materialize
+
+    result, _ = pipeline_result
+    monkeypatch.setattr(materialize, "DRIVER_MAX_EDGES", 0)
+    pipe = _pipeline(spark, corpus)
+    dist = pipe.run(fixture_pages(spark, corpus))
+    cmap_plan = pipe.component_map()._jdf.queryExecution().optimizedPlan()
+    assert not cmap_plan.toString().startswith("LocalRelation")  # fallback fired
+    for name in ("linked", "triples"):
+        got = {tuple(r) for r in getattr(dist, name).collect()}
+        want = {tuple(r) for r in getattr(result, name).collect()}
+        assert got == want and len(got) > 0, name
+
+
+# measured 10 jobs (local[4], 8 shuffle partitions); the margin absorbs
+# AQE re-planning jitter.  With list-built dimension frames, a lineage
+# job per stage and the distributed component map the same run takes 38.
+PIPELINE_JOB_BUDGET = 14
+
+
+def test_pipeline_job_budget(spark, corpus, tmp_path, count_jobs):
+    """A materializing KGPipeline run on the fixture corpus runs no
+    Spark job over driver-sized data: dimension tables and lineage are
+    resolved on the driver."""
+    pages = fixture_pages(spark, corpus)
+    pipe = _pipeline(spark, corpus, out_dir=str(tmp_path / "kg"))
+    jobs, _ = count_jobs(lambda: pipe.run(pages))
+    assert jobs <= PIPELINE_JOB_BUDGET
 
 
 def test_digit_alias_narrow_oracle_parity(spark, corpus):
@@ -256,8 +298,6 @@ def test_distributed_components_match_driver_path(spark, corpus, monkeypatch):
     sid = surface_dictionary(entities_df(spark, corpus.entities)).select(
         "surface", "entity_id"
     )
-    from pyspark.sql import functions as F
-
     e = (
         equivalences_df(spark, corpus.equivalences)
         .join(sid.withColumnRenamed("surface", "surface_a"), "surface_a")
