@@ -265,10 +265,8 @@ def _run_triples_job(sf_dir: str, cpus: int, replicate: int) -> dict:
     import pyspark.sql.functions as F
 
     from knowledgeextraction_spark.core.artifacts import get_weights
-    from knowledgeextraction_spark.operators.canonicalize import entity_component_map
     from knowledgeextraction_spark.operators.detect import detect_records_from_pages
-    from knowledgeextraction_spark.operators.link import surface_dictionary
-    from knowledgeextraction_spark.operators.triples import emit_triples_narrow
+    from knowledgeextraction_spark.pipeline import KGPipeline
     from knowledgeextraction_spark.session import get_spark
     from knowledgeextraction_spark.sources import pages as pages_src
 
@@ -281,18 +279,16 @@ def _run_triples_job(sf_dir: str, cpus: int, replicate: int) -> dict:
 
     # --- prologue (untimed): constant-size prep that does not scale
     # with the pages input — in production these are materialized stage
-    # tables (resume): the dictionary component map, model broadcast,
-    # and python-worker spin-up.
+    # tables (resume): the pipeline's surface dictionary and component
+    # map, model broadcast, and python-worker spin-up.
     bc = spark.sparkContext.broadcast(get_weights())
-    cmap = entity_component_map(
-        pages_src.equivalences_df(spark, pages_src.doc_equivalences()),
-        surface_dictionary(pages_src.entities_df(spark)),
-    ).cache()
-    cmap.count()
-    entities = pages_src.entities_df(spark).cache()
-    entities.count()
-    rules = pages_src.rules_df(spark).cache()
-    rules.count()
+    pipe = KGPipeline(
+        spark,
+        entities=pages_src.entities_df(spark),
+        rules=pages_src.rules_df(spark),
+        equivalences=pages_src.equivalences_df(spark, pages_src.doc_equivalences()),
+    )
+    pipe.component_map()
 
     from pyspark.sql.functions import pandas_udf
 
@@ -314,8 +310,7 @@ def _run_triples_job(sf_dir: str, cpus: int, replicate: int) -> dict:
     # no repartition: the pages parquet is written with 128 partitions,
     # so the whole plan (scan → fused UDF → in-array pairing → broadcast
     # joins) is shuffle-free until the final distinct
-    rm = detect_records_from_pages(zh, bc)
-    triples = emit_triples_narrow(rm, rules, entities, cmap)
+    triples = pipe.triples(detect_records_from_pages(zh, bc))
     n_triples = triples.count()
     dt = time.monotonic() - t0
 

@@ -45,8 +45,3 @@ def build_vocab() -> dict[str, int]:
 @lru_cache(maxsize=1)
 def vocab_size() -> int:
     return len(build_vocab())
-
-
-def char_id(ch: str, vocab: dict[str, int]) -> int:
-    """Vocab lookup with UNK fallback (crf_utils.py:158-159)."""
-    return vocab.get(ch, UNK_ID)

@@ -205,24 +205,13 @@ def entity_component_map_rows(
 
     # surface_components: union-find over node ids linked by
     # (normalized) equivalence endpoints sharing a dictionary surface
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in equivalences:
-        na = by_surface.get(normalize_digits(a), [])
-        nb = by_surface.get(normalize_digits(b), [])
-        for x in na:
-            for y in nb:
-                rx, ry = find(x), find(y)
-                if rx != ry:
-                    parent[max(rx, ry)] = min(rx, ry)
-    comp = {n: find(n) for n in list(parent)}
+    edges = [
+        (x, y)
+        for a, b in equivalences
+        for x in by_surface.get(normalize_digits(a), [])
+        for y in by_surface.get(normalize_digits(b), [])
+    ]
+    comp = dict(_driver_components(edges))
 
     # entity_component_map: sid ⋈ surface_components on surface (all
     # types of the surface), min component per entity

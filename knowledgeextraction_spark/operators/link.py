@@ -1,4 +1,4 @@
-"""J8: entity linking — salted broadcast-hash join against the dictionary.
+"""J8: entity linking — broadcast-hash join against the surface dictionary.
 
 The reference's analog is a per-char dict lookup with UNK fallback
 (crf_utils.py:158-159) and the GloVe join (chinese_CONLL.py:177-188);
@@ -9,15 +9,15 @@ Scale design (SURVEY.md §4 item 1):
 - The surface→entity dictionary is a dimension table (≤ millions of
   rows): ``broadcast()`` join — NO shuffle of the (huge) mentions fact
   table, and skew from Zipfian head surfaces is irrelevant because a
-  broadcast join never co-locates by key. The explicit ``salted=True``
-  path exists for the case where the dictionary outgrows broadcast: it
-  salts the mention side and replicates the dictionary side N_SALT ways,
-  turning one hot key into N_SALT balanced partitions (plus AQE
-  skew-join as backstop).
-- Embedding tie-break: when one surface maps to several entities
-  (ambiguous alias), rank by cosine(mention-context embedding, entity
-  embedding) — here surfaces are unique by construction, so the rank
-  window is a no-op that keeps the plan shape honest.
+  broadcast join never co-locates by key.
+- The dictionary arrives resolved: ``KGPipeline._dimensions`` builds it
+  once per pipeline (``surface_dictionary_rows`` on the driver, or
+  ``surface_dictionary`` above ``materialize.DRIVER_MAX_EDGES``) and
+  passes the same frame to ``link_mentions`` and
+  ``triples.emit_triples_narrow``.
+- No embedding tie-break: the dictionary keys each (surface,
+  label_type) to its smallest entity_id, so a mention links to at most
+  one entity.
 """
 
 from __future__ import annotations
@@ -86,48 +86,19 @@ def surface_dictionary_rows(entities: list) -> list[tuple[str, str, int]]:
     return sorted((s, t, eid) for (s, t), eid in dic.items())
 
 
-def link_mentions(
-    mentions: DataFrame,
-    entities: DataFrame,
-    salted: bool = False,
-    n_salt: int = 8,
-    dictionary: DataFrame | None = None,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     """mentions + dictionary → linked mentions (adds entity_id).
 
     Inner join: unlinked mentions are dropped (NIL linking is a filter,
     not a null column, for the triple path). Label types must agree.
-    ``dictionary``: an optional prebuilt (surface, label_type,
-    entity_id) frame, as in ``triples.emit_triples_narrow``.
+    ``dictionary``: the (surface, label_type, entity_id) frame of
+    ``surface_dictionary`` or its driver twin.
     """
-    if dictionary is None:
-        dictionary = surface_dictionary(entities)
     dic = dictionary.withColumnRenamed("label_type", "dict_label")
     m = mentions.withColumn("norm_surface", normalize_surface(F.col("surface")))
-
-    if not salted:
-        joined = m.join(
-            F.broadcast(dic), m.norm_surface == dic.surface, "inner"
-        )
-    else:
-        # salt the fact side; replicate the dimension side n_salt ways
-        salted_m = m.withColumn(
-            "salt", F.pmod(F.hash("url", "rec_id", "start_pos"), F.lit(n_salt))
-        )
-        salted_d = dic.crossJoin(
-            F.broadcast(
-                m.sparkSession.range(n_salt).select(F.col("id").cast("int").alias("salt"))
-            )
-        )
-        joined = salted_m.join(
-            salted_d,
-            (salted_m.norm_surface == salted_d.surface)
-            & (salted_m.salt == salted_d.salt),
-            "inner",
-        ).drop("salt")
-
     return (
-        joined.filter(F.col("label_type") == F.col("dict_label"))
+        m.join(F.broadcast(dic), m.norm_surface == dic.surface, "inner")
+        .filter(F.col("label_type") == F.col("dict_label"))
         .drop("surface", "dict_label")
         .withColumnRenamed("norm_surface", "surface")
     )

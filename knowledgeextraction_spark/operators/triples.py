@@ -38,9 +38,8 @@ _DELIM_RE = "|".join(DELIMITERS)
 def emit_triples_narrow(
     records_mentions: DataFrame,
     rules: DataFrame,
-    entities: DataFrame,
+    dictionary: DataFrame,
     component_map: DataFrame,
-    dictionary: DataFrame | None = None,
 ) -> DataFrame:
     """Shuffle-minimal triple emission from the fused detect output.
 
@@ -57,13 +56,15 @@ def emit_triples_narrow(
     shuffles until it has been reduced to (subj, pred, obj, url, rec)
     tuples.
 
-    Mention surfaces are digit-normalized (link.normalize_surface)
-    before the dictionary joins — the same convention link_mentions
-    (link.py) applies to the mentions snapshot and the dictionary itself
-    applies in surface_dictionary, so a digit-bearing alias links
+    ``dictionary``: the (surface, label_type, entity_id) frame of
+    link.surface_dictionary or its driver twin — the same frame
+    link_mentions gets.  Mention surfaces are digit-normalized
+    (link.normalize_surface) before the dictionary joins — the same
+    convention link_mentions applies to the mentions snapshot and the
+    dictionary itself applies, so a digit-bearing alias links
     identically in the triples and in the linked table.
     """
-    from .link import normalize_surface, surface_dictionary
+    from .link import normalize_surface
 
     def _pair_ok(p):
         between = F.col("text").substr(
@@ -106,17 +107,12 @@ def emit_triples_narrow(
         "inner",
     ).filter(F.instr(F.col("between"), F.col("pattern")) > 0)
 
-    # ``dictionary``: an optional prebuilt (surface, label_type,
-    # entity_id) frame — a caller whose dictionary is driver-resident
-    # (link.surface_dictionary_rows) passes a local relation and skips
-    # the explode+groupBy sub-DAG under each broadcast build (r06)
-    dic = dictionary if dictionary is not None else surface_dictionary(entities)
-    subj_dic = dic.select(
+    subj_dic = dictionary.select(
         F.col("surface").alias("surf1"),
         F.col("label_type").alias("t1"),
         F.col("entity_id").alias("subj_entity"),
     )
-    obj_dic = dic.select(
+    obj_dic = dictionary.select(
         F.col("surface").alias("surf2"),
         F.col("label_type").alias("t2"),
         F.col("entity_id").alias("obj_entity"),

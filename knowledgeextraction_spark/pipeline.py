@@ -116,7 +116,8 @@ class KGPipeline:
     """Composable pipeline; stages are lazily-declared DataFrames.
 
     ``out_dir=None`` keeps everything in one unmaterialized DAG (used
-    by tests/bench); with ``out_dir`` each stage materializes + resumes.
+    by the KG queries, tests and bench); with ``out_dir`` each stage
+    materializes + resumes.
     """
 
     def __init__(
@@ -199,20 +200,14 @@ class KGPipeline:
         return self._dims
 
     def linked(self, mentions: DataFrame) -> DataFrame:
-        return link_mentions(
-            mentions, self.entities, dictionary=self._dimensions()[0]
-        )
+        return link_mentions(mentions, self._dimensions()[0])
 
     def component_map(self) -> DataFrame:
         return self._dimensions()[1]
 
     def triples(self, records: DataFrame) -> DataFrame:
         return emit_triples_narrow(
-            records,
-            self.rules,
-            self.entities,
-            self.component_map(),
-            dictionary=self._dimensions()[0],
+            records, self.rules, self._dimensions()[0], self.component_map()
         )
 
     # --- orchestration --------------------------------------------------
@@ -278,12 +273,6 @@ class KGPipeline:
             F.count("*").alias("weight")
         )
         edges.write.mode("overwrite").parquet(os.path.join(base, "edges"))
-
-
-    def write_graph_tables_bucketed(
-        self, result: PipelineResult, n_buckets: int = 16, prefix: str = "kg"
-    ) -> None:
-        write_bucketed_graph_tables(result.triples, n_buckets, prefix)
 
 
 def _drop_managed_table(spark: SparkSession, name: str) -> None:

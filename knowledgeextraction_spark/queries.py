@@ -114,14 +114,20 @@ def _extracted_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _records_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """zh pages → the fused detect stage's (url, rec_id, text,
-    mentions), rebalanced across all cores before the encoder."""
-    from .operators.detect import detect_records_from_pages
+def _doc_pipeline(spark: SparkSession, out_dir: str | None = None):
+    """The doc-world ``KGPipeline``: every KG query runs its stages —
+    the same language gate, repartition width, fused detect stage and
+    driver-resolved dictionary and component map as the deployed
+    pipeline."""
+    from .pipeline import KGPipeline
 
-    par = spark.sparkContext.defaultParallelism
-    zh = _pages(spark, sf_dir).filter(F.col("lang") == "zh").select("url", "html")
-    return detect_records_from_pages(zh.repartition(par), weights_broadcast(spark))
+    return KGPipeline(
+        spark,
+        entities=pages_src.entities_df(spark),
+        rules=pages_src.rules_df(spark),
+        equivalences=pages_src.equivalences_df(spark, pages_src.doc_equivalences()),
+        out_dir=out_dir,
+    )
 
 
 _EXTRACT_SQL_BODY = (
@@ -246,16 +252,14 @@ def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1+M2 mention detection: the fused detect stage, one row per
     mention (model-based → rows-only check here; exact parity is
     pytest's oracle gate)."""
-    from .operators.detect import explode_mentions
-
-    return explode_mentions(_records_mentions(spark, sf_dir))
+    pipe = _doc_pipeline(spark)
+    return pipe.mentions(pipe.records(_pages(spark, sf_dir)))
 
 
 def q_kg_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8 entity linking of detected mentions."""
-    from .operators.link import link_mentions
-
-    return link_mentions(q_kg_mentions(spark, sf_dir), pages_src.entities_df(spark))
+    pipe = _doc_pipeline(spark)
+    return pipe.linked(pipe.mentions(pipe.records(_pages(spark, sf_dir))))
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,15 +270,8 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     KGPipeline's own triples stage, with its driver-resolved dimension
     tables; its parity with the numpy oracle is asserted in
     tests/test_spark_pipeline.py."""
-    from .pipeline import KGPipeline
-
-    pipe = KGPipeline(
-        spark,
-        entities=pages_src.entities_df(spark),
-        rules=pages_src.rules_df(spark),
-        equivalences=pages_src.equivalences_df(spark, pages_src.doc_equivalences()),
-    )
-    return pipe.triples(_records_mentions(spark, sf_dir))
+    pipe = _doc_pipeline(spark)
+    return pipe.triples(pipe.records(_pages(spark, sf_dir)))
 
 
 def q_mrc_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -315,7 +312,7 @@ def q_kg_relations_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .broadcast import nre_weights_broadcast
     from .operators.nre import classify_relations_fused
 
-    rm = _records_mentions(spark, sf_dir)
+    rm = _doc_pipeline(spark).records(_pages(spark, sf_dir))
     return sorted_output(
         classify_relations_fused(rm, nre_weights_broadcast(spark)).withColumn(
             "score", F.round("score", 6)
@@ -343,8 +340,6 @@ def q_kg_relations_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from .broadcast import nre_weights_broadcast
-    from .operators.detect import explode_mentions
-    from .operators.link import link_mentions
     from .operators.nre import bag_relations, classify_relations_fused
 
     # persisted for the two consumers below; unlike crf_fit (which
@@ -352,11 +347,12 @@ def q_kg_relations_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here is lazy, so the cache lives until the caller's
     # clearCache()/session end — same contract as dedup_jaccard's
     # shared shingle table
-    rm = _records_mentions(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    pipe = _doc_pipeline(spark)
+    rm = pipe.records(_pages(spark, sf_dir)).persist(StorageLevel.MEMORY_AND_DISK)
     scored = classify_relations_fused(
         rm, nre_weights_broadcast(spark)
     ).withColumn("score", F.round("score", 6))
-    linked = link_mentions(explode_mentions(rm), pages_src.entities_df(spark))
+    linked = pipe.linked(pipe.mentions(rm))
     return sorted_output(
         bag_relations(scored, linked)
         .withColumn("bag_score", F.round("bag_score", 6))
@@ -819,8 +815,8 @@ FROM nodes n LEFT JOIN per p USING (id) ORDER BY entity_id
 
 def q_pipeline_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 + [NORTH] resumability as a driver-gated query: run the
-    materializing pipeline (stage snapshots + per-partition lineage
-    appends, pipeline.py:_stage/_lineage_rows) into a fresh out_dir,
+    materializing pipeline (stage snapshots + one lineage row per
+    written file, pipeline.py:_stage/_append_lineage) into a fresh out_dir,
     run it a SECOND time — every stage must resume from its snapshot
     (compute-if-absent) — then read back the ``_lineage`` table and
     report per-stage total row counts.  Lineage rows append only when
@@ -832,20 +828,12 @@ def q_pipeline_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .pipeline import KGPipeline
-
     out = os.path.join(
         tempfile.gettempdir(),
         f"sparkkg_lineage_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     shutil.rmtree(out, ignore_errors=True)
-    pipe = KGPipeline(
-        spark,
-        entities=pages_src.entities_df(spark),
-        rules=pages_src.rules_df(spark),
-        equivalences=pages_src.equivalences_df(spark, pages_src.doc_equivalences()),
-        out_dir=out,
-    )
+    pipe = _doc_pipeline(spark, out_dir=out)
     pages = _pages(spark, sf_dir)
     pipe.run(pages)
     pipe.run(pages)  # must resume every stage — no new lineage rows

@@ -1,4 +1,4 @@
-"""F14 alignment, J8 salted join parity, S16 partitioned graph sink."""
+"""F14 alignment, S16 partitioned graph sink."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -70,38 +70,6 @@ def test_banded_lcs_matches_full_lcs():
         b = "".join(rnd.choice("abc") for _ in range(rnd.randint(1, 15)))
         f, _g = banded_lcs(a, b, band=20)  # band ≥ max len → exact
         assert f[-1, -1] == full_lcs(a, b), (a, b)
-
-
-# --------------------------------------------------------------------------
-# salted link join parity (J8 skew path)
-# --------------------------------------------------------------------------
-
-
-def test_salted_link_matches_unsalted(spark, corpus):
-    from knowledgeextraction_spark.broadcast import weights_broadcast
-    from knowledgeextraction_spark.operators.detect import (
-        detect_records_from_pages,
-        explode_mentions,
-    )
-    from knowledgeextraction_spark.operators.link import link_mentions
-    from knowledgeextraction_spark.sources.pages import entities_df, fixture_pages
-
-    import pyspark.sql.functions as F
-
-    pages = fixture_pages(spark, corpus).filter(F.col("lang") == "zh")
-    rm = detect_records_from_pages(pages.select("url", "html"), weights_broadcast(spark))
-    mentions = explode_mentions(rm).cache()
-    ents = entities_df(spark, corpus.entities)
-
-    def key_set(df):
-        return {
-            (r["url"], r["rec_id"], r["start_pos"], r["end_pos"], r["entity_id"])
-            for r in df.collect()
-        }
-
-    plain = key_set(link_mentions(mentions, ents, salted=False))
-    salted = key_set(link_mentions(mentions, ents, salted=True, n_salt=4))
-    assert plain == salted and len(plain) > 0
 
 
 # --------------------------------------------------------------------------

@@ -3,7 +3,7 @@ joins (the parquet stand-in for Iceberg bucket(N, id) partitioning)."""
 
 
 def test_bucketed_join_is_exchange_free(spark, corpus):
-    from knowledgeextraction_spark.pipeline import KGPipeline
+    from knowledgeextraction_spark import pipeline
     from knowledgeextraction_spark.sources.pages import (
         entities_df,
         equivalences_df,
@@ -13,14 +13,14 @@ def test_bucketed_join_is_exchange_free(spark, corpus):
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        pipe = KGPipeline(
+        pipe = pipeline.KGPipeline(
             spark,
             entities=entities_df(spark, corpus.entities),
             rules=rules_df(spark, corpus.rules),
             equivalences=equivalences_df(spark, corpus.equivalences),
         )
         result = pipe.run(fixture_pages(spark, corpus))
-        pipe.write_graph_tables_bucketed(result, n_buckets=4, prefix="t_kg")
+        pipeline.write_bucketed_graph_tables(result.triples, 4, "t_kg")
 
         t = spark.table("t_kg_triples")
         n = spark.table("t_kg_nodes").withColumnRenamed("entity_id", "subj_id")

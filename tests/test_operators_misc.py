@@ -395,6 +395,7 @@ def test_triple_delimiters_match_reference(spark):
     across '……' must not."""
     from knowledgeextraction_spark.fixtures.generator import Entity
     from knowledgeextraction_spark.operators.detect import RECORDS_MENTIONS_SCHEMA
+    from knowledgeextraction_spark.operators.link import surface_dictionary
     from knowledgeextraction_spark.operators.triples import emit_triples_narrow
     from knowledgeextraction_spark.sources.pages import entities_df
 
@@ -422,7 +423,7 @@ def test_triple_delimiters_match_reference(spark):
     got = {
         (r.subj_id, r.predicate, r.obj_id, r.rec_id)
         for r in emit_triples_narrow(
-            records_mentions, rules, entities, no_merges
+            records_mentions, rules, surface_dictionary(entities), no_merges
         ).collect()
     }
     assert got == {(1, "rel", 2, 0)}

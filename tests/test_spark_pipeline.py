@@ -5,9 +5,13 @@ pipeline's outputs at P/R ≥ 0.95. Oracle and pipeline share weights and
 per-row code, so we assert exact equality (P/R = 1.0) on every stage.
 """
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
+from knowledgeextraction_spark import pipeline
 from knowledgeextraction_spark.core.packing import pack_sentences
 from knowledgeextraction_spark.core.textops import extract_text
 from knowledgeextraction_spark.oracle.pipeline import run_pipeline
@@ -246,14 +250,12 @@ def test_digit_alias_narrow_oracle_parity(spark, corpus):
 
     entities = entities_df(spark, corpus.entities)
     rules = rules_df(spark, corpus.rules)
-    cmap = entity_component_map(
-        equivalences_df(spark, corpus.equivalences),
-        surface_dictionary(entities),
-    )
+    dictionary = surface_dictionary(entities)
+    cmap = entity_component_map(equivalences_df(spark, corpus.equivalences), dictionary)
 
     narrow = {
         tuple(r)
-        for r in emit_triples_narrow(rm, rules, entities, cmap)
+        for r in emit_triples_narrow(rm, rules, dictionary, cmap)
         .select("subj_id", "predicate", "obj_id", "url", "rec_id")
         .collect()
     }
@@ -283,7 +285,7 @@ def test_digit_alias_narrow_oracle_parity(spark, corpus):
     assert narrow == oracle
     linked = {
         (r["start_pos"], r["entity_id"])
-        for r in link_mentions(explode_mentions(rm), entities).collect()
+        for r in link_mentions(explode_mentions(rm), dictionary).collect()
     }
     assert linked == {(m.start_pos, eid) for m, eid in oracle_linked}
     assert len(linked) == 2
@@ -320,3 +322,30 @@ def test_distributed_components_match_driver_path(spark, corpus, monkeypatch):
         (r["id"], r["component"]) for r in connected_components(e).collect()
     }
     assert dist == local and len(dist) > 0
+
+
+# the fused detect, link and triples operators: only KGPipeline wires
+# them, so every KG query and the deployed pipeline share one wiring
+KG_OPERATORS = {"detect_records_from_pages", "link_mentions", "emit_triples_narrow"}
+
+
+def test_kg_operators_are_wired_only_by_pipeline():
+    """Inside the package only pipeline.py calls the KG operators.  A
+    module that defines one of the names itself calls its own function:
+    the operator's module, and oracle/pipeline.py's numpy twin of
+    ``link_mentions``."""
+    pkg = pathlib.Path(pipeline.__file__).parent
+    calls = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        if rel == "pipeline.py":
+            continue
+        tree = ast.parse(path.read_text())
+        own = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if name in KG_OPERATORS - own:
+                calls.append(f"{rel}:{node.lineno} {name}")
+    assert calls == [], f"KG operators wired outside pipeline.py: {calls}"
