@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import driver_rows, local_frame, materialize
-from .dedup import normalized_text
+from .dedup import adjacent_structs, normalized_words
 
 N_MERGES = 20
 END_MARK = "</w>"
@@ -43,7 +43,7 @@ def word_freq_table(docs: DataFrame) -> DataFrame:
     """→ (word, freq): whitespace tokens of the normalized text with
     corpus frequencies — the ONE corpus-sized pass of BPE training."""
     w = docs.select(
-        F.explode(F.split(normalized_text(), " ")).alias("word")
+        F.explode(normalized_words()).alias("word")
     ).filter(F.length("word") > 0)
     return w.groupBy("word").agg(F.count("*").cast("long").alias("freq"))
 
@@ -51,12 +51,9 @@ def word_freq_table(docs: DataFrame) -> DataFrame:
 def _pair_counts(vocab: DataFrame) -> DataFrame:
     """(syms, freq) → (left, right, freq): freq-weighted adjacent pair
     counts over the vocabulary's symbol arrays."""
-    from .dedup import adjacent_structs
-
     pairs = adjacent_structs(F.col("syms"), "left", "right")
     return (
         vocab.select("freq", F.explode(pairs).alias("p"))
-        .filter(F.col("p").isNotNull())
         .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
         .agg(F.sum("freq").cast("long").alias("freq"))
     )
@@ -258,7 +255,7 @@ def encode_token_counts(
     stream = materialize(
         docs.select(
             "doc_id",
-            F.explode(F.split(normalized_text(), " ")).alias("word"),
+            F.explode(normalized_words()).alias("word"),
         ).filter(F.length("word") > 0)
     )
     vocab_tok = (

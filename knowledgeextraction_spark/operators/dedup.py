@@ -72,35 +72,54 @@ def normalized_text(col="text"):
     return F.regexp_replace(F.lower(F.trim(F.col(col))), r"\s+", " ")
 
 
+def normalized_words(col="text"):
+    """the whitespace tokens of the normalized text — the ONE tokenizer.
+    Gram builders select it as a column before any lambda reads it:
+    passed as an expression, Catalyst copies the whole lower → trim →
+    regexp_replace → split chain into every lambda body, once per gram.
+    ``F.trim`` strips spaces only, so a leading ``\\n``/``\\t``
+    yields an empty first token (mirrored by the oracles)."""
+    return F.split(normalized_text(col), " ")
+
+
 def word_count(col="text"):
     """whitespace-token count of the normalized text, with the empty
     string counting 0 (split('') yields [''], size 1 — the quirk every
     caller must dodge the same way).  The ONE word-count convention —
     mirrored by queries._WORD_COUNT_SQL."""
-    norm = normalized_text(col)
     return (
-        F.when(F.length(norm) == 0, F.lit(0))
-        .otherwise(F.size(F.split(norm, " ")))
+        F.when(F.length(normalized_text(col)) == 0, F.lit(0))
+        .otherwise(F.size(normalized_words(col)))
         .cast("long")
     )
 
 
+def _windows(arr, n, f):
+    """array of ``f(i)`` for every start index i (0-based) of a full
+    ``n``-element window of ``arr`` — the ONE home of the window index
+    arithmetic (word n-grams, adjacent pairs).  An array shorter than
+    ``n`` yields [], a null array null; ``n`` may be a column.  The
+    array entry's index IS the window start, so ``posexplode`` recovers
+    positions."""
+    starts = F.slice(arr, 1, F.greatest(F.size(arr) - n + 1, F.lit(0)))
+    return F.transform(starts, lambda _, i: f(i))
+
+
+def word_ngrams(words, n):
+    """array of the space-joined word n-grams of a words COLUMN, in
+    start-position order (see ``_windows``)."""
+    return _windows(words, n, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
+
+
 def adjacent_structs(arr, f1: str = "w1", f2: str = "w2"):
     """array of struct(f1=arr[i], f2=arr[i+1]) over every adjacent
-    element pair — the ONE home for the guarded
-    sequence/element_at(i+1, i+2) index arithmetic (selection bigrams,
-    BPE pair counts).  Sub-2-element arrays yield only null entries;
-    callers explode and filter ``isNotNull`` (the shingle-stage
-    convention)."""
-    idx = F.sequence(F.lit(0), F.greatest(F.size(arr) - 2, F.lit(0)))
-    return F.transform(
-        idx,
-        lambda i: F.when(
-            i + 2 <= F.size(arr),
-            F.struct(
-                F.element_at(arr, i + 1).alias(f1),
-                F.element_at(arr, i + 2).alias(f2),
-            ),
+    element pair of an array COLUMN (selection bigrams, BPE pair
+    counts); sub-2-element arrays yield []."""
+    return _windows(
+        arr,
+        2,
+        lambda i: F.struct(
+            F.element_at(arr, i + 1).alias(f1), F.element_at(arr, i + 2).alias(f2)
         ),
     )
 
@@ -186,18 +205,24 @@ def collapse_exact(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return reps, m.select("doc_id", "rep_id")
 
 
-def word_shingles(col="text", n: int = SHINGLE):
-    """array of word n-gram strings (space-joined, distinct)."""
-    words = F.split(normalized_text(col), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(words, i + 1, n), " ")
-    )
+def word_shingles(words, n: int = SHINGLE):
+    """array of the distinct word n-gram strings of a words COLUMN.  A
+    doc of 1..n-1 words is its own one short shingle (the oracles'
+    ``greatest(len - n + 1, 1)``)."""
+    grams = word_ngrams(words, F.least(F.lit(n), F.size(words)))
     return F.array_distinct(F.filter(grams, lambda g: F.length(g) > 0))
 
 
+def _shingles(docs: DataFrame, n: int, *keys: str) -> DataFrame:
+    """→ (*keys, shingle): one row per distinct word n-gram of a doc."""
+    words = docs.select(*keys, normalized_words().alias("words"))
+    return words.select(
+        *keys, F.explode(word_shingles(F.col("words"), n)).alias("shingle")
+    )
+
+
 def shingle_table(docs: DataFrame) -> DataFrame:
-    return docs.select("doc_id", F.explode(word_shingles()).alias("shingle"))
+    return _shingles(docs, SHINGLE, "doc_id")
 
 
 def contamination_scores(
@@ -226,14 +251,8 @@ def contamination_scores(
 
     Pass ``shingles`` to reuse an already-built corpus shingle table.
     """
-    sh = shingles if shingles is not None else docs.select(
-        "doc_id", F.explode(word_shingles(n=n)).alias("shingle")
-    )
-    bench = (
-        benchmark.select(F.explode(word_shingles(n=n)).alias("shingle"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+    sh = shingles if shingles is not None else _shingles(docs, n, "doc_id")
+    bench = _shingles(benchmark, n).distinct().withColumn("hit", F.lit(1))
     return (
         sh.join(bench, "shingle", "left")
         .groupBy("doc_id")
@@ -402,7 +421,7 @@ def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:
     word table, a 60× shuffle amplification at scale.)
     """
     words = docs.select(
-        "doc_id", F.explode(F.split(normalized_text(), " ")).alias("word")
+        "doc_id", F.explode(normalized_words()).alias("word")
     ).filter(F.length("word") > 0)
     # Per-occurrence ±1 per bit sums to the same total as ±count per
     # distinct word, so no (doc_id, word) pre-count is needed.
@@ -639,23 +658,10 @@ def positional_shingle_table(docs: DataFrame, n: int = DUP_SPAN_K) -> DataFrame:
     0-based start-word position (no distinct — positions matter here,
     unlike ``shingle_table``).  Docs with fewer than n words emit
     nothing."""
-    words = F.split(normalized_text(), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-    structs = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.when(
-                i + n <= F.size(words),
-                F.array_join(F.slice(words, i + 1, n), " "),
-            ).alias("gram"),
-        ),
-    )
-    return (
-        docs.select("doc_id", F.explode(structs).alias("s"))
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.gram").alias("gram"))
-        .filter(F.col("gram").isNotNull() & (F.length("gram") > 0))
-    )
+    words = docs.select("doc_id", normalized_words().alias("words"))
+    return words.select(
+        "doc_id", F.posexplode(word_ngrams(F.col("words"), n)).alias("pos", "gram")
+    ).filter(F.length("gram") > 0)
 
 
 def duplicated_spans(
@@ -849,7 +855,7 @@ def remove_duplicated_spans(
     spans = duplicated_spans(docs, n, min_docs)
     words = docs.select(
         "doc_id",
-        F.posexplode(F.split(normalized_text(), " ")).alias("pos", "word"),
+        F.posexplode(normalized_words()).alias("pos", "word"),
     ).filter(F.length("word") > 0)
     kept = words.join(
         spans,

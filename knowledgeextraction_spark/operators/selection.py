@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize
-from .dedup import normalized_text, word_count
+from .dedup import adjacent_structs, normalized_words, word_count, word_ngrams
 
 N_BUCKETS = 1024
 ALPHA = 1.0  # add-alpha smoothing over the bucket space
@@ -59,43 +59,16 @@ def hashed_grams(docs: DataFrame, ngram_max: int = 2) -> DataFrame:
     (n = 1..ngram_max, the DSIR unigram+bigram feature set), bucket =
     first 15 md5 hex digits mod N_BUCKETS.  Occurrences, not distinct
     — the features are bag counts."""
-    words = F.split(normalized_text(), " ")
-    grams = F.array_compact(
-        F.flatten(
-            F.array(
-                *[
-                    F.transform(
-                        F.sequence(
-                            F.lit(0),
-                            F.greatest(F.size(words) - n, F.lit(0)),
-                        ),
-                        # NOTE: close over n via default arg OUTSIDE the
-                        # 2-param (element, index) trap
-                        _gram_at(words, n),
-                    )
-                    for n in range(1, ngram_max + 1)
-                ]
-            )
-        )
+    words = F.col("words")
+    grams = F.flatten(
+        F.array(*[word_ngrams(words, n) for n in range(1, ngram_max + 1)])
     )
-    g = docs.select("doc_id", F.explode(grams).alias("gram")).filter(
-        F.length("gram") > 0
+    g = (
+        docs.select("doc_id", normalized_words().alias("words"))
+        .select("doc_id", F.explode(grams).alias("gram"))
+        .filter(F.length("gram") > 0)
     )
     return g.select("doc_id", md5_mod(F.col("gram"), N_BUCKETS).alias("bucket"))
-
-
-def _gram_at(words, n: int):
-    """n-gram-at-index lambda with n bound eagerly (a 2-parameter
-    lambda would silently receive the ARRAY INDEX as its second arg)."""
-
-    def f(i):
-        if n == 1:
-            return F.element_at(words, i + 1)
-        return F.when(
-            i + n <= F.size(words), F.array_join(F.slice(words, i + 1, n), " ")
-        )
-
-    return f
 
 
 def bucket_distribution(docs: DataFrame, ngram_max: int = 2) -> DataFrame:
@@ -338,11 +311,9 @@ LM_ALPHA = 1.0
 def _bigram_occurrences(docs: DataFrame) -> DataFrame:
     """→ (doc_id, w1, w2): one row per adjacent word pair of the
     normalized text.  Docs with fewer than two words emit nothing."""
-    from .dedup import adjacent_structs
-
-    words = F.split(normalized_text(), " ")
     return (
-        docs.select("doc_id", F.explode(adjacent_structs(words)).alias("s"))
+        docs.select("doc_id", normalized_words().alias("words"))
+        .select("doc_id", F.explode(adjacent_structs(F.col("words"))).alias("s"))
         .select("doc_id", F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2"))
         .filter((F.length("w1") > 0) & (F.length("w2") > 0))
     )

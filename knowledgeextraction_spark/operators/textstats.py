@@ -410,10 +410,10 @@ def tfidf_keywords(docs: DataFrame, top_k: int = TFIDF_TOP_K) -> DataFrame:
     window partitions by doc — bounded by doc vocabulary, skewless."""
     from pyspark.sql import Window
 
-    from .dedup import normalized_text
+    from .dedup import normalized_words
 
     w = docs.select(
-        "doc_id", F.explode(F.split(normalized_text(), " ")).alias("word")
+        "doc_id", F.explode(normalized_words()).alias("word")
     ).filter(F.length("word") > 0)
     tf = w.groupBy("doc_id", "word").agg(F.count("*").cast("long").alias("tf"))
     df = tf.groupBy("word").agg(F.count("*").cast("long").alias("df"))
@@ -450,14 +450,14 @@ def pmi_bigrams(
     among pairs seen >= ``min_count`` times.  Unigram counts are word
     occurrences over the corpus; ties break (pmi desc, w1, w2) and
     the global cut is a TakeOrdered — bounded, no full sort."""
-    from .dedup import normalized_text
+    from .dedup import normalized_words
     from .selection import _bigram_occurrences
 
     bg = _bigram_occurrences(docs.select("doc_id", "text"))
     bc = bg.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c_pair"))
     uni = (
         docs.select(
-            F.explode(F.split(normalized_text(), " ")).alias("word")
+            F.explode(normalized_words()).alias("word")
         )
         .filter(F.length("word") > 0)
         .groupBy("word")

@@ -1740,10 +1740,8 @@ def _paged_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     javascript, every 3rd lacks terminal punctuation, every 11th doc
     gains a lorem-ipsum line and every 13th a curly-brace line —
     exercising every C4 branch."""
-    d = _docs(spark, sf_dir)
-    words = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "
-    )
+    d = _docs(spark, sf_dir).select("doc_id", dedup.normalized_words().alias("words"))
+    words = F.col("words")
     n_chunks = F.greatest(
         F.ceil(F.size(words) / F.lit(12.0)).cast("int"), F.lit(1)
     )

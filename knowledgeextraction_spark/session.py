@@ -65,11 +65,8 @@ def get_spark(
         # changes shuffles totalling < parallelism × 1 MB — at
         # production scale every real shuffle clears that bar and the
         # setting is inert, so it is a small-data fidelity knob, not a
-        # local[32] tuning.  Env-overridable like the other knobs.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARKKG_MIN_PARTITION_SIZE", "64k"),
-        )
+        # local[32] tuning.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # prefer shuffled-hash join when the per-partition build side
         # fits (guide-recommended baseline: SMJ pays a sort both sides;

@@ -233,7 +233,7 @@ def neardup_stream(docs: DataFrame, n_bands: int | None = None) -> DataFrame:
     """
     import pyspark.sql.functions as F
 
-    from ..operators.dedup import N_BANDS, word_shingles
+    from ..operators.dedup import N_BANDS, normalized_words, word_shingles
 
     nb = N_BANDS if n_bands is None else n_bands
 
@@ -256,7 +256,8 @@ def neardup_stream(docs: DataFrame, n_bands: int | None = None) -> DataFrame:
         ]
     )
     sigs = (
-        docs.withColumn("_shingles", word_shingles())
+        docs.withColumn("_words", normalized_words())
+        .withColumn("_shingles", word_shingles(F.col("_words")))
         .select("doc_id", F.explode(band_structs).alias("bs"))
         .select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
         .filter(F.col("sig").isNotNull())

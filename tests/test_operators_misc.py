@@ -161,12 +161,83 @@ def test_contamination_scores_planted_overlap(spark):
     assert got[2]["contamination"] == pytest.approx(2 / 7)
 
 
-def test_word_shingles(spark):
-    from knowledgeextraction_spark.operators.dedup import word_shingles
+# one doc per row-contract edge of the gram builders (n = 3 shingles
+# and positional grams, n = 2 hashed grams and bigrams).  F.trim strips
+# spaces only, so a leading or inner \t/\n run becomes an EMPTY token.
+GRAM_TEXTS = {
+    1: "alpha",  # 1 word
+    2: "alpha beta",  # n-1 words for n = 3; exactly n for n = 2
+    3: "alpha beta gamma",  # exactly n for n = 3
+    4: "alpha beta gamma delta",
+    5: "",
+    6: "   ",  # trims to empty
+    7: " \t ",  # trims to "\t": two empty tokens
+    8: None,
+    9: "Alpha  beta\t\tgamma \n delta",  # mixed whitespace runs
+    10: "\nalpha beta gamma",
+    11: "\talpha beta",
+}
 
-    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    got = sorted(docs.select(word_shingles()).collect()[0][0])
-    assert got == ["a b c", "b c d"]
+# the DuckDB oracles mirror these row contracts
+GRAM_ROWS = {
+    # a doc of 1..n-1 words is its own short shingle
+    "shingle_table": [
+        (1, "alpha"), (2, "alpha beta"), (3, "alpha beta gamma"),
+        (4, "alpha beta gamma"), (4, "beta gamma delta"), (7, " "),
+        (9, "alpha beta gamma"), (9, "beta gamma delta"),
+        (10, " alpha beta"), (10, "alpha beta gamma"), (11, " alpha beta"),
+    ],
+    # docs with fewer than n words emit nothing
+    "positional_shingle_table": [
+        (3, 0, "alpha beta gamma"), (4, 0, "alpha beta gamma"),
+        (4, 1, "beta gamma delta"), (9, 0, "alpha beta gamma"),
+        (9, 1, "beta gamma delta"), (10, 0, " alpha beta"),
+        (10, 1, "alpha beta gamma"), (11, 0, " alpha beta"),
+    ],
+    # rows per doc: a 1-word doc emits only its unigram
+    "hashed_grams": [
+        (1, 1), (2, 3), (3, 5), (4, 7), (7, 1), (9, 7), (10, 6), (11, 4),
+    ],
+    # docs with fewer than 2 (non-empty) words emit nothing
+    "_bigram_occurrences": [
+        (2, "alpha", "beta"), (3, "alpha", "beta"), (3, "beta", "gamma"),
+        (4, "alpha", "beta"), (4, "beta", "gamma"), (4, "gamma", "delta"),
+        (9, "alpha", "beta"), (9, "beta", "gamma"), (9, "gamma", "delta"),
+        (10, "alpha", "beta"), (10, "beta", "gamma"), (11, "alpha", "beta"),
+    ],
+}
+
+
+def test_word_shingles(spark):
+    """Row contracts of every gram builder over the GRAM_TEXTS edges."""
+    from collections import Counter
+
+    from knowledgeextraction_spark.operators.dedup import (
+        positional_shingle_table,
+        shingle_table,
+    )
+    from knowledgeextraction_spark.operators.selection import (
+        _bigram_occurrences,
+        hashed_grams,
+    )
+
+    docs = spark.createDataFrame(
+        sorted(GRAM_TEXTS.items()), "doc_id long, text string"
+    )
+    got = {
+        "shingle_table": sorted(map(tuple, shingle_table(docs).collect())),
+        "positional_shingle_table": sorted(
+            map(tuple, positional_shingle_table(docs, 3).collect())
+        ),
+        "hashed_grams": sorted(
+            Counter(r.doc_id for r in hashed_grams(docs).collect()).items()
+        ),
+        "_bigram_occurrences": sorted(
+            map(tuple, _bigram_occurrences(docs).collect())
+        ),
+    }
+    wrong = [b for b in GRAM_ROWS if got[b] != GRAM_ROWS[b]]
+    assert wrong == [], {b: got[b] for b in wrong}
 
 
 def test_lsh_finds_identical_docs(spark):
