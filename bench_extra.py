@@ -27,6 +27,8 @@ def noop(df):
 
 
 def timed(spark, name, build, trials=3):
+    from knowledgeextraction_spark.materialize import release_all
+
     best, times = None, []
     for _ in range(trials):
         spark.sparkContext.setJobDescription(name)
@@ -36,7 +38,7 @@ def timed(spark, name, build, trials=3):
             noop(out)
         dt = time.monotonic() - t0
         times.append(dt)
-        spark.catalog.clearCache()
+        release_all(spark)
         spark.sparkContext.setJobDescription(None)
     times.sort()
     print(f"{name:45s} min={times[0]:7.3f}  med={times[len(times)//2]:7.3f}", flush=True)
@@ -48,11 +50,12 @@ def main():
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sections = set(sys.argv[1:]) or {"triples", "quality", "bpe", "graph", "corpus", "misc"}
 
+    from bench import spill_to_shm
     from knowledgeextraction_spark.core.artifacts import get_weights
     from knowledgeextraction_spark.session import get_spark
 
     get_weights()
-    os.environ.setdefault("SPARKKG_LOCAL_DIR", "/dev/shm/sparkkg-tmp")
+    spill_to_shm()
     spark = get_spark("sparkkg-bench-extra", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
 

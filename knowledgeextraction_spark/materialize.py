@@ -53,6 +53,18 @@ def sorted_output(df: DataFrame, *cols) -> DataFrame:
     return df.localCheckpoint(eager=False).orderBy(*cols)
 
 
+def release_all(spark: SparkSession) -> None:
+    """Drop every cached frame and every persisted RDD.
+
+    ``localCheckpoint`` blocks (``materialize``, ``sorted_output``) are
+    persisted RDDs, not cached frames: ``catalog.clearCache()`` leaves
+    them in storage memory, so a caller that runs query after query in
+    one session (a benchmark's trial loop) accumulates them."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+
+
 def driver_rows(df: DataFrame, limit: int) -> list[Row] | None:
     """``df``'s rows when it has at most ``limit`` of them, else None.
 

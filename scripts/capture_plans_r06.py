@@ -43,10 +43,11 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+    from bench import spill_to_shm
     from knowledgeextraction_spark.queries import QUERIES
     from knowledgeextraction_spark.session import get_spark
 
-    os.environ.setdefault("SPARKKG_LOCAL_DIR", "/dev/shm/sparkkg-tmp")
+    spill_to_shm()
     spark = get_spark("sparkkg-plans", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06")

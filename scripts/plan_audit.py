@@ -291,6 +291,7 @@ def audit(sf_dir: str) -> str:
     os.environ.setdefault(
         "SPARKKG_GOLDEN_SF", os.path.basename(sf_dir.rstrip("/"))
     )
+    from knowledgeextraction_spark.materialize import release_all
     from knowledgeextraction_spark.queries import QUERIES
     from knowledgeextraction_spark.session import get_spark
 
@@ -314,7 +315,7 @@ def audit(sf_dir: str) -> str:
                 len(re.findall(r"PushedFilters: \[(?!\])", plan)),
             )
         )
-        spark.catalog.clearCache()
+        release_all(spark)
     spark.stop()
 
     sf = os.path.basename(sf_dir.rstrip("/"))

@@ -8,13 +8,15 @@ The north-star deployment shape:
         scripts/run_pipeline.py \
         --sf-dir /data/sf0.1 --out /data/kg_out
 
-On a cluster the session comes from spark-submit's conf (master,
-executors, memory); this script only adds the engine's SQL-level
-settings (AQE, Arrow batching) on top of whatever the submitter
-provided.  Input is the documents-derived pages table (sources.pages);
-swap `pages_from_documents` for `spark.read.table("pages")` against a
-real Iceberg catalog.  Every stage snapshot lands under --out with
-one _lineage row per written part file (row counts from the parquet
+The session comes from ``session.get_spark``, the engine's one
+factory.  Under spark-submit the submitter's conf (master, executors,
+memory, JVM options) stands and only the engine's SQL-level settings
+(shuffle width, AQE, join strategy, Arrow batching) are added; run
+directly with python, it is a local session on a host-sized driver.
+Input is the documents-derived pages table (sources.pages); swap
+`pages_from_documents` for `spark.read.table("pages")` against a real
+Iceberg catalog.  Every stage snapshot lands under --out with one
+_lineage row per written part file (row counts from the parquet
 footers, written by the driver); a rerun with the same --out skips
 completed stages.
 """
@@ -31,21 +33,11 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=16)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from knowledgeextraction_spark.pipeline import KGPipeline
-    from knowledgeextraction_spark.session import ARROW_BATCH
+    from knowledgeextraction_spark.session import get_spark
     from knowledgeextraction_spark.sources import pages as ps
 
-    spark = (
-        SparkSession.builder.appName("sparkkg-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("sparkkg-pipeline")
 
     pages = ps.pages_from_documents(spark, args.sf_dir)
     pipe = KGPipeline(

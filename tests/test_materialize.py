@@ -134,3 +134,18 @@ def test_local_frame_runs_no_job(spark, count_jobs):
     assert count_jobs(listed.collect)[0] >= 1
     assert count_jobs(lambda: materialize.driver_rows(listed, 216))[0] >= 1
     assert "ExistingRDD" in build_side(listed)
+
+
+def test_release_all_frees_checkpoint_blocks(spark):
+    """``sorted_output``'s checkpoint blocks survive ``clearCache``;
+    ``release_all`` drops them."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+
+    before = set(rdds().keys())
+    materialize.sorted_output(spark.range(100), "id").collect()
+    left = set(rdds().keys()) - before
+    assert left
+    spark.catalog.clearCache()
+    assert left <= set(rdds().keys())
+    materialize.release_all(spark)
+    assert not rdds()
