@@ -7,11 +7,15 @@ standard large-scale training-data dedup operators, Spark-first:
 - exact:      md5(normalized text) → keep min(doc_id) per hash.
               One shuffle (groupBy hash); at 100 TB the hash groupBy is
               the canonical dedup and AQE coalesces the skewless output.
-- minhash LSH: word-shingle → per-band minhash signature → band-bucket
-              join for candidate pairs → exact Jaccard verify.
-              Shuffles: explode+groupBy for signatures (combine-enabled
-              min agg), self-join on (band, sig) buckets — bucket keys
-              are near-uniform by construction (hashes), so no skew.
+- minhash LSH: one distinct word-shingle SET per doc → per-band minhash
+              signature → band-bucket join for candidate pairs → exact
+              Jaccard verify.  Signatures are narrow (array_min over
+              the doc's own set, no shuffle); the only shuffles are the
+              self-join on (band, sig) buckets — bucket keys are
+              near-uniform by construction (hashes), so no skew — and
+              the verify's two joins of candidate pairs to the sets,
+              which intersect the two sets per pair (the whole-record
+              verify of the set-similarity-join literature).
 - simhash:    64-bit-ish (60-bit) sign-aggregated word hash; near-dup =
               small Hamming distance. All md5/bit arithmetic — portable
               to the DuckDB oracle.
@@ -222,14 +226,23 @@ def _shingles(docs: DataFrame, n: int, *keys: str) -> DataFrame:
 
 
 def shingle_table(docs: DataFrame) -> DataFrame:
-    return _shingles(docs, SHINGLE, "doc_id")
+    """→ (doc_id, shingles): one row per doc, its distinct word 3-gram
+    set — the input the minhash and Jaccard stages read whole, never
+    exploded.  Input contract: one row per ``doc_id`` (the documents
+    key and ``collapse_exact``'s reps both meet it).  A doc with no
+    shingles keeps its row with an empty or null set;
+    ``minhash_signatures`` drops it where its signature comes out null,
+    so it never becomes a candidate.  (Filtering on ``size(shingles)``
+    here would be pushed below the projection with the whole tokenizer
+    copied into the predicate.)"""
+    words = docs.select("doc_id", normalized_words().alias("words"))
+    return words.select("doc_id", word_shingles(F.col("words")).alias("shingles"))
 
 
 def contamination_scores(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = SHINGLE,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """→ (doc_id, n_shingles, n_hit, contamination): per-doc fraction
     of distinct word n-grams that appear ANYWHERE in the benchmark
@@ -248,10 +261,8 @@ def contamination_scores(
     benchmark doc still contributes ONE right-side row.  Docs whose
     normalized text yields no shingles produce no row (same contract as
     the shingle-based dedup stages).
-
-    Pass ``shingles`` to reuse an already-built corpus shingle table.
     """
-    sh = shingles if shingles is not None else _shingles(docs, n, "doc_id")
+    sh = _shingles(docs, n, "doc_id")
     bench = _shingles(benchmark, n).distinct().withColumn("hit", F.lit(1))
     return (
         sh.join(bench, "shingle", "left")
@@ -272,36 +283,40 @@ def contamination_scores(
 def minhash_signatures(
     docs: DataFrame, n_bands: int = N_BANDS, shingles: DataFrame | None = None
 ) -> DataFrame:
-    """→ (doc_id, band, sig): per-band minhash via min(md5(band:shingle)).
+    """→ (doc_id, band, sig): per-band minhash, band b's sig is
+    ``min(md5("b:" + shingle))`` over the doc's shingle set.
 
-    One pass over the shingle table: a single groupBy(doc_id) computes
-    all ``n_bands`` mins as separate map-side-combinable aggregates, and
-    the (band, sig) rows are exploded AFTER aggregation — so neither the
-    scan nor the shuffle is amplified ``n_bands``× (the earlier
-    crossJoin-with-a-band-table formulation exploded every shingle row
-    8-fold before the combine).
+    One narrow pass over the set table — ``array_min`` of a
+    ``transform`` per band, no explode of the shingles and no groupBy
+    — then the ``n_bands`` (band, sig) rows per doc are exploded; a doc
+    with an empty or null set (null sig) is dropped there.  The
+    streaming near-dup stage (``stateful.neardup_stream``) reuses it
+    row by row.
 
-    Pass ``shingles`` to reuse an already-built (cached) shingle table.
+    Pass ``shingles`` to reuse an already-built (cached) ``shingle_table``.
     """
-    sh = shingles if shingles is not None else shingle_table(docs)
-    per_doc = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat_ws(":", F.lit(str(b)), F.col("shingle")))
-            ).alias(f"sig{b}")
-            for b in range(n_bands)
-        ]
-    )
+    sets = shingles if shingles is not None else shingle_table(docs)
+
+    def sig(b: int):
+        # the band prefix is closed over OUTSIDE the lambda: a
+        # two-parameter lambda (e.g. ``lambda s, b=b``) is treated by
+        # F.transform as the (element, index) form and silently binds
+        # the second name to the ARRAY INDEX column
+        prefix = F.lit(f"{b}:")
+        return F.array_min(
+            F.transform(F.col("shingles"), lambda s: F.md5(F.concat(prefix, s)))
+        )
+
     band_structs = F.array(
         *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"), F.col(f"sig{b}").alias("sig")
-            )
+            F.struct(F.lit(b).cast("int").alias("band"), sig(b).alias("sig"))
             for b in range(n_bands)
         ]
     )
-    return per_doc.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
+    return (
+        sets.select("doc_id", F.explode(band_structs).alias("bs"))
+        .select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+        .filter(F.col("sig").isNotNull())
     )
 
 
@@ -322,7 +337,7 @@ def lsh_candidate_pairs(
     sig = minhash_signatures(docs, n_bands, shingles=shingles)
     # the signature table has up to 4 plan references below (bucket
     # count, its join probe, and both self-join sides) — materialize it
-    # once or every reference re-runs the scan→shingle→min-agg upstream
+    # once or every reference re-runs the scan→tokenize→signature upstream
     sig = materialize(sig)
     if max_bucket is not None:
         sig = _cap_buckets(sig, ["band", "sig"], max_bucket)
@@ -362,47 +377,30 @@ def lsh_bucket_stats(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    candidates: DataFrame | None = None,
+    candidates: DataFrame,
     threshold: float = 0.5,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact word-shingle Jaccard for pairs ≥ threshold.
+    """→ (doc_a, doc_b, jaccard): the ``candidates`` pairs (from LSH)
+    whose exact word-shingle Jaccard is ≥ threshold.
 
-    With ``candidates`` (from LSH) only those pairs are verified — the
-    100-TB path. Without, all co-shingled pairs are scored (test scale).
-    Pass ``shingles`` to reuse an already-built (cached) shingle table.
+    Each pair joins both docs' shingle sets and intersects them whole:
+    |A ∩ B| / (|A| + |B| − |A ∩ B|) — candidates-sized joins, no
+    per-shingle rows.  Pass ``shingles`` to reuse an already-built
+    (cached) ``shingle_table``; its one-row-per-doc contract holds here.
     """
-    sh = shingles if shingles is not None else shingle_table(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    if candidates is not None:
-        # candidates-first: intersect shingles only for LSH candidate
-        # pairs (candidates × avg-shingles rows) instead of exploding
-        # the full co-shingle pair space and filtering afterwards
-        inter = (
-            candidates.join(a, "doc_a")
-            .join(b, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_common"))
-        )
-    else:
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_common"))
-        )
+    sets = shingles if shingles is not None else shingle_table(docs)
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sa"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sb"))
+    n = F.size(F.array_intersect("sa", "sb"))
+    # try_divide: a pair of two empty sets has no Jaccard (null), not
+    # an ANSI divide-by-zero error
+    jaccard = F.try_divide(n, F.size("sa") + F.size("sb") - n)
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
+        candidates.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
     )
 
 

@@ -1324,7 +1324,7 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps, _members = dedup.collapse_exact(_docs_with_replicas(spark, sf_dir))
     # the shingle table feeds BOTH the LSH candidate stage and the
     # Jaccard verify — build it once and persist (memory-and-disk: at
-    # 100 TB it spills rather than recomputing the scan+explode twice)
+    # 100 TB it spills rather than recomputing the scan+tokenize twice)
     from pyspark import StorageLevel
 
     sh = dedup.shingle_table(reps).persist(StorageLevel.MEMORY_AND_DISK)

@@ -208,10 +208,9 @@ def neardup_stream(docs: DataFrame, n_bands: int | None = None) -> DataFrame:
     elected representative, and every arriving document is verdicted
     against it per band, exactly once.
 
-    Per-band signatures are computed NARROW — ``array_min`` over a
-    ``transform`` of the row's own distinct-shingle array reproduces
-    the batch ``min(md5(band:shingle))`` per-band minhash without any
-    streaming groupBy/shuffle — then exploded to (doc_id, band, sig)
+    Per-band signatures are the batch ``minhash_signatures``, which
+    are NARROW — ``array_min`` over each row's own distinct-shingle
+    set, no streaming groupBy/shuffle — exploded to (doc_id, band, sig)
     rows.  A document emits one row per band; ``rep_id == doc_id``
     means this document opened (represents) the bucket.  The per-doc
     verdict is the stateless fold ``keep ⇔ every(rep_id = doc_id)``
@@ -231,37 +230,9 @@ def neardup_stream(docs: DataFrame, n_bands: int | None = None) -> DataFrame:
     batch rule rep_id = min(doc_id) over (band, sig), and the emitted
     rep_id makes any violation detectable downstream.
     """
-    import pyspark.sql.functions as F
+    from ..operators.dedup import N_BANDS, minhash_signatures
 
-    from ..operators.dedup import N_BANDS, normalized_words, word_shingles
-
-    nb = N_BANDS if n_bands is None else n_bands
-
-    def _band_sig(b: int):
-        # the band prefix must be closed over OUTSIDE the lambda: a
-        # two-parameter lambda (e.g. ``lambda s, b=b``) is treated by
-        # F.transform as the (element, index) form and silently binds
-        # the second name to the ARRAY INDEX column
-        prefix = F.lit(f"{b}:")
-        return F.array_min(
-            F.transform(F.col("_shingles"), lambda s: F.md5(F.concat(prefix, s)))
-        )
-
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"), _band_sig(b).alias("sig")
-            )
-            for b in range(nb)
-        ]
-    )
-    sigs = (
-        docs.withColumn("_words", normalized_words())
-        .withColumn("_shingles", word_shingles(F.col("_words")))
-        .select("doc_id", F.explode(band_structs).alias("bs"))
-        .select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-        .filter(F.col("sig").isNotNull())
-    )
+    sigs = minhash_signatures(docs, N_BANDS if n_bands is None else n_bands)
 
     def f(key, pdfs, state):
         yield from _neardup_update(key, pdfs, state)

@@ -127,17 +127,18 @@ Commentary (what the counts mean for the 100 TB plan):
   tests/test_bucketed_join.py asserts the Exchange-free join plan.
 - **squad_read**: nested-JSON scan + explode is narrow; the single
   exchange is the output orderBy.
-- **dedup family**: groupBys on hash keys (uniform, skewless); minhash
-  and simhash are single-aggregation plans (the 8×/60× row explosions
-  of round 1 are gone).  Candidate generation is cluster-linear: exact
+- **dedup family**: groupBys on hash keys (uniform, skewless); simhash
+  is a single-aggregation plan and minhash a narrow projection over
+  one shingle set per doc (no explode, no aggregation).  Candidate generation is cluster-linear: exact
   duplicates collapse to one representative before shingling (rep map
   = map-side-combinable groupBy + AQE-splittable join), and the
   per-bucket `MAX_BUCKET` cap is the same shape (`_cap_buckets`);
   multiply-referenced signature tables are checkpointed once so the
   self-joins read materialized blocks instead of re-running the
-  scan→shingle→min-agg upstream.  `dedup_jaccard`'s count includes BOTH the
+  scan→tokenize→signature upstream.  `dedup_jaccard`'s count includes BOTH the
   LSH-candidate branch and the verify branch over the shared persisted
-  shingle table.  `decontaminate` is the no-pair-enumeration shape:
+  shingle-set table; the verify joins each candidate pair to the two
+  sets and intersects them whole.  `decontaminate` is the no-pair-enumeration shape:
   the benchmark side collapses to a distinct shingle set once (small —
   eval suites, not corpora), the corpus shingle stream left-joins it on
   the uniform shingle key and folds into one map-side-combinable

@@ -7,15 +7,24 @@ import pathlib
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from knowledgeextraction_spark import queries
 from knowledgeextraction_spark.operators import dedup, selection
 
 PKG = pathlib.Path(queries.__file__).parent
 
+
+def _pairs(docs):
+    return docs.select(
+        F.col("doc_id").alias("doc_a"), (F.col("doc_id") + 1).alias("doc_b")
+    )
+
+
 # builder → (plan, number of tokenized input frames).  A words
 # EXPRESSION read inside a lambda is copied into the lambda body, once
-# per read, so the normalization shows up once per copy.
+# per read, so the normalization shows up once per copy.  The verify
+# reads a shingle table materialized once, as its callers pass it.
 BUILDERS = {
     "shingle_table": (dedup.shingle_table, 1),
     "positional_shingle_table": (dedup.positional_shingle_table, 1),
@@ -23,19 +32,37 @@ BUILDERS = {
     "_bigram_occurrences": (selection._bigram_occurrences, 1),
     "contamination_scores": (lambda d: dedup.contamination_scores(d, d), 2),
     "_paged_docs": (lambda d: queries._paged_docs(d.sparkSession, "unused"), 1),
+    "minhash_signatures": (dedup.minhash_signatures, 1),
+    "lsh_candidate_pairs": (dedup.lsh_candidate_pairs, 1),
+    "ngram_jaccard_pairs": (
+        lambda d: dedup.ngram_jaccard_pairs(
+            d, _pairs(d), shingles=dedup.materialize(dedup.shingle_table(d))
+        ),
+        1,
+    ),
 }
 
 
 @pytest.mark.parametrize("name", sorted(BUILDERS))
 def test_gram_builders_tokenize_once(spark, monkeypatch, name):
+    """Counted over the built frame's plan and the plans of the frames
+    ``dedup.materialize`` cut on the way."""
     docs = spark.createDataFrame(
         [(1, "Alpha beta  gamma delta"), (2, "beta gamma")],
         "doc_id long, text string",
     )
     monkeypatch.setattr(queries, "_docs", lambda spark, sf_dir: docs)
+    plans = []
+    cut = dedup.materialize
+
+    def materialize(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return cut(df)
+
+    monkeypatch.setattr(dedup, "materialize", materialize)
     build, n_frames = BUILDERS[name]
-    plan = build(docs)._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("regexp_replace") == n_frames, plan
+    plans.append(build(docs)._jdf.queryExecution().optimizedPlan().toString())
+    assert sum(p.count("regexp_replace") for p in plans) == n_frames, plans
 
 
 def test_tokenizer_is_spelled_once():

@@ -225,7 +225,9 @@ def test_word_shingles(spark):
         sorted(GRAM_TEXTS.items()), "doc_id long, text string"
     )
     got = {
-        "shingle_table": sorted(map(tuple, shingle_table(docs).collect())),
+        "shingle_table": sorted(
+            map(tuple, shingle_table(docs).select("doc_id", F.explode("shingles")).collect())
+        ),
         "positional_shingle_table": sorted(
             map(tuple, positional_shingle_table(docs, 3).collect())
         ),

@@ -1,6 +1,8 @@
 """The session factory's sizing rule (knowledgeextraction_spark/session.py):
-a fixed driver heap sized from the host, and nothing but SQL settings
-under spark-submit."""
+a fixed driver heap sized from the host, nothing but SQL settings
+under spark-submit, and a codegen cache that holds a job's classes."""
+
+import os
 
 import pytest
 
@@ -69,3 +71,29 @@ def test_live_session_heap_is_fixed(spark):
     xms = [o[len("-Xms"):] for o in opts if o.startswith("-Xms")]
     assert xms == [conf.get("spark.driver.memory")]
     assert "-XX:+AlwaysPreTouch" in opts
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeat_run_reuses_generated_classes(spark):
+    """A query mix run a second time compiles (almost) nothing new.
+    This mix generates more than the default cache's 100 classes and
+    reuses them in the same order, so an LRU of 100 evicts each class
+    before its next use and the repeat recompiles nearly all of them."""
+    from knowledgeextraction_spark.queries import QUERIES
+
+    sf_dir = os.environ.get("SPARKKG_TEST_SF", "/root/testdata/sf0.001")
+    mix = ("dedup_jaccard", "corpus_clean")
+
+    def run():
+        before = _compiles(spark)
+        for name in mix:
+            QUERIES[name](spark, sf_dir).collect()
+        return _compiles(spark) - before
+
+    first, second = run(), run()
+    assert second <= 0.1 * first, (first, second)
