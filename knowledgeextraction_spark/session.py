@@ -7,13 +7,17 @@ all plan with the same SQL settings:
 - AQE on (runtime coalescing + skew-join splitting — SURVEY.md §4.2),
 - Arrow enabled with a bounded batch size (the model stage's analog of
   the reference's predict micro-batching, crf_utils.py:271),
-- shuffle partitions sized by parallelism (overridable),
+- shuffle partitions sized by parallelism (overridable): a local
+  master's thread count, at least 8, with ``local[*]`` counted as the
+  CPUs this process may run on; 32 for any other master,
 - broadcast threshold left to Catalyst; explicit broadcast() is used on
   dimension tables (entity dictionary, rules) regardless,
 - a codegen cache of 1,000 generated classes (default 100), so a warm
   job whose plans need more than 100 reuses them instead of
   recompiling every one (corpus_dedup: ~131 recompiles per warm job
-  at the default).
+  at the default), and whole-stage classes named without their stage
+  id, so a stage AQE numbers differently from one run to the next
+  still finds its class in that cache.
 
 The driver heap is sized from the host — an eighth of its memory
 (physical memory, or the cgroup limit when that is lower), clamped to
@@ -59,6 +63,17 @@ def host_mib(cgroup_limits: tuple[str, ...] = _CGROUP_LIMITS) -> int:
     return mib
 
 
+def _local_threads(master: str | None) -> int | None:
+    """Task threads of a ``local[N]`` or ``local[*]`` master (``*``:
+    the CPUs this process may run on); None for any other master."""
+    if not master or not (master.startswith("local[") and master.endswith("]")):
+        return None
+    n = master[6:-1]
+    if n == "*":
+        return len(os.sched_getaffinity(0))
+    return int(n) if n.isdigit() else None
+
+
 def session_conf(
     master: str | None,
     host: int,
@@ -69,10 +84,8 @@ def session_conf(
     over a host of ``host`` MiB.  ``submitted``: the JVM was launched by
     spark-submit, whose master, memory and JVM options stand."""
     if shuffle_partitions is None:
-        if master and master.startswith("local[") and master[6:-1].isdigit():
-            shuffle_partitions = max(int(master[6:-1]), 8)
-        else:
-            shuffle_partitions = 32
+        threads = _local_threads(master)
+        shuffle_partitions = 32 if threads is None else max(threads, 8)
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -107,6 +120,13 @@ def session_conf(
         # order, so an LRU of 100 evicted each before its next use and
         # every warm job recompiled ~131 classes with Janino (1.6–2.0 s)
         "spark.sql.codegen.cache.maxEntries": "1000",
+        # AQE numbers whole-stage-codegen stages in the order their
+        # query stages are planned, which varies from run to run; with
+        # the id in the class name the same stage's source text changes
+        # with it, misses the cache and is compiled again (dsir_weights:
+        # 0-18 recompiles per warm job, each a fresh class the JIT
+        # starts cold on)
+        "spark.sql.codegen.useIdInClassName": "false",
     }
     if submitted:
         return conf

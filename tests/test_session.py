@@ -1,6 +1,7 @@
 """The session factory's sizing rule (knowledgeextraction_spark/session.py):
-a fixed driver heap sized from the host, nothing but SQL settings
-under spark-submit, and a codegen cache that holds a job's classes."""
+a fixed driver heap sized from the host, a shuffle width from the
+local thread count, nothing but SQL settings under spark-submit, and a
+codegen cache that holds a job's classes."""
 
 import os
 
@@ -61,6 +62,27 @@ def test_spark_submit_keeps_the_submitters_jvm_settings(monkeypatch):
     assert conf == {k: v for k, v in local.items() if k in conf}
     assert conf["spark.sql.shuffle.partitions"] == "8"
     assert conf["spark.sql.adaptive.enabled"] == "true"
+
+
+@pytest.mark.parametrize(
+    "master, width",
+    [
+        ("local[2]", 8),  # the floor
+        ("local[16]", 16),
+        ("local[*]", max(len(os.sched_getaffinity(0)), 8)),  # this process's CPUs
+        ("spark://head:7077", 32),  # not a local master
+    ],
+)
+def test_shuffle_width_follows_the_local_thread_count(master, width):
+    conf = session_conf(master, 16 * GIB, submitted=False)
+    assert conf["spark.sql.shuffle.partitions"] == str(width)
+
+
+def test_generated_class_names_carry_no_stage_id():
+    """AQE numbers stages in a run-dependent order; an id in the class
+    name would make a renumbered stage miss the codegen cache."""
+    conf = session_conf("local[4]", 16 * GIB, submitted=True)
+    assert conf["spark.sql.codegen.useIdInClassName"] == "false"
 
 
 def test_live_session_heap_is_fixed(spark):
